@@ -38,7 +38,7 @@ def sf_dir() -> str:
 # fast-lane representative (one seed, one agreement test, the in-window +
 # round-touched oracle set); the slow lane (`-m ""` / `-m slow`) still runs
 # everything for builder rounds. Durations that justified each entry:
-# /tmp-measured full run r13, committed in OPTIMIZATION_r13.md.
+# measured in a full r13 run.
 # ---------------------------------------------------------------------------
 
 # oracle rows kept in the fast lane beyond the driver window: queries whose

@@ -274,13 +274,13 @@ def test_probe_state_memoized_and_build_entry_fresh(spark, sf_dir):
     from pathlib import Path
 
     from zcode_iceberg_spark.suite.llm import (
-        _hash_state_dir,
+        _build_scratch,
         q_dedup_ledger_build,
         q_neardup_incremental_persisted,
     )
 
     first = _rows(q_dedup_incremental_persisted(spark, sf_dir))
-    state = Path(_hash_state_dir(sf_dir))
+    state = Path(_build_scratch("zspark_hash_state_", sf_dir))
     assert state.exists()
     stamp = {p: os.stat(p).st_mtime_ns for p in state.rglob("*.parquet")}
     assert stamp
@@ -294,7 +294,7 @@ def test_probe_state_memoized_and_build_entry_fresh(spark, sf_dir):
 
     # the LSH twin memoizes the same way
     r1 = q_neardup_incremental_persisted(spark, sf_dir).count()
-    lsh_state = Path(_hash_state_dir(sf_dir) + "_lsh")
+    lsh_state = Path(_build_scratch("zspark_hash_state_", sf_dir) + "_lsh")
     lsh_stamp = {
         p: os.stat(p).st_mtime_ns for p in lsh_state.rglob("*.parquet")
     }

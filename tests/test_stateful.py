@@ -12,7 +12,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from zcode_iceberg_spark.operators.stateful import _hysteresis_fold
+from zcode_iceberg_spark.operators.stateful import _fsm_step, _hysteresis_fold
 from zcode_iceberg_spark.suite.stateful import (
     _decisions,
     q_ledger_daily_summary,
@@ -87,6 +87,34 @@ def test_hysteresis_kernel_split_invariance():
             got.extend(labs)
             i = j
         assert got == batch_lab
+
+
+@pytest.mark.parametrize("confirm_k", [0, -1])
+def test_hysteresis_rejects_confirm_k_below_one(confirm_k):
+    """A flip needs at least the confirming row: confirm_k < 1 is
+    outside the kernel's contract and must fail loudly, not wrap the
+    per-run slice and overwrite earlier rows."""
+    with pytest.raises(ValueError, match="confirm_k"):
+        _hysteresis_fold(pd.Series(["UP", "UP", "DOWN", "DOWN"]), confirm_k)
+
+
+def test_fsm_rejects_nat_ts():
+    """A NaT tick has no holding time: the FSM must raise instead of
+    emitting a take-profit exit with held ≈ -9.2e9 s."""
+    pdf = pd.DataFrame(
+        {
+            "ts": pd.to_datetime([0, None, 60], unit="s"),
+            "event_id": range(3),
+            "price": [100.0, 103.0, 104.0],  # row 1 would fire TP
+            "z": [2.0, 0.0, 0.0],  # row 0 opens LONG
+        }
+    )
+    st = {"uid": 1, "seq": 0, "qty": None, "pos": None}
+    with pytest.raises(ValueError, match="NaT"):
+        _fsm_step(
+            pdf, st, z_entry=1.5, tp_pct=0.01, sl_pct=0.01,
+            max_hold_secs=3600.0, margin=50.0, leverage=25.0,
+        )
 
 
 def test_streaming_matches_batch_hysteresis(spark, sf_dir):

@@ -64,9 +64,15 @@ def _hysteresis_fold(
     Python work disappears while the emitted (label, count) sequence
     and the final carried state are identical by case analysis —
     pinned by the hysteresis split-invariance seeds and the
-    batch<->stream agreement tests."""
+    batch<->stream agreement tests.
+
+    Contract: ``confirm_k >= 1`` (a flip needs at least the confirming
+    row itself); anything smaller raises ``ValueError`` instead of
+    wrapping the run slice."""
     import numpy as np
 
+    if confirm_k < 1:
+        raise ValueError(f"hysteresis confirm_k must be >= 1, got {confirm_k}")
     arr = np.asarray(labels, dtype=object)
     n = len(arr)
     if n == 0:
@@ -195,7 +201,11 @@ def _fsm_step(
     same float64 values (held = ns-diff / 1e9 == Timedelta
     .total_seconds(); change/pnl unchanged expressions). Pinned by
     the FSM split-invariance seeds, the batch<->stream agreement
-    tests, and the hash oracles of the whole ledger family."""
+    tests, and the hash oracles of the whole ledger family.
+
+    Contract: every ``ts`` is a real timestamp — a NaT row raises
+    ``ValueError`` (it has no holding time; the tick loaders drop null
+    ``ts`` before any decision is formed)."""
     import numpy as np
 
     rows: list[tuple] = []
@@ -205,7 +215,10 @@ def _fsm_step(
         return rows
     px = pdf["price"].to_numpy(dtype=np.float64)
     z = pdf["z"].to_numpy(dtype=np.float64)
-    ts_ns = pdf["ts"].to_numpy(dtype="datetime64[ns]").astype(np.int64)
+    ts64 = pdf["ts"].to_numpy(dtype="datetime64[ns]")
+    if np.isnat(ts64).any():
+        raise ValueError(f"position FSM: NaT ts in the rows of key {uid}")
+    ts_ns = ts64.astype(np.int64)
     ts_col = pdf["ts"]
     if st["qty"] is None:
         st["qty"] = round(margin * leverage / max(float(px[0]), 1e-9), 6)

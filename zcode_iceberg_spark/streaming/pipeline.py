@@ -82,10 +82,32 @@ def _sniffed_parquet_stream(spark: SparkSession, src_dir: str) -> DataFrame:
         # re-sniff. Only the no-files AnalysisException is absorbed so
         # real read failures still surface.
         schema = EVENT_SCHEMA
+    return _file_stream(spark, src_dir, schema)
+
+
+def _file_stream(
+    spark: SparkSession, src_dir: str, schema, fmt: str = "parquet"
+) -> DataFrame:
+    """THE file-source stream: one file per micro-batch, so arrival
+    order is epoch order (the append-ingest contract every stream here
+    relies on)."""
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+        .format(fmt)
+        .load(src_dir)
+    )
+
+
+def _drain_epochs(df: DataFrame, step, checkpoint: str, *args):
+    """THE foreachBatch drain: run ``step(batch_df, epoch_id, *args)``
+    over everything available now under ``checkpoint``. Returns the
+    started StreamingQuery."""
+    return (
+        df.writeStream.foreachBatch(lambda b, e: step(b, e, *args))
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
 
 
@@ -93,7 +115,11 @@ def _tick_stream_shape(ev: DataFrame) -> DataFrame:
     """The transport-agnostic normalization tail every event source
     funnels through (field selection, JSON qty, validity filter,
     watermark) — ONE boundary, so swapping the transport (parquet
-    files, Kafka, socket replay) never touches an operator.
+    files, Kafka, socket replay) never touches an operator. The
+    validity filter is the batch loader's: price > 0, qty > 0 and
+    ts IS NOT NULL (a NaT tick has no event time; the watermark does
+    not drop it inside foreachBatch, and the stateful kernels reject
+    it).
 
     Same ``from_json`` parse as the batch loader (sources/tables.py
     ``events_ticks``, r12): one-field-schema Jackson parse binds the
@@ -115,7 +141,12 @@ def _tick_stream_shape(ev: DataFrame) -> DataFrame:
             qty.alias("qty"),
             F.col("event_type").isin("click", "view", "signup").alias("is_buy"),
         )
-        .filter((F.col("price") > 0) & F.col("qty").isNotNull() & (F.col("qty") > 0))
+        .filter(
+            (F.col("price") > 0)
+            & F.col("ts").isNotNull()
+            & F.col("qty").isNotNull()
+            & (F.col("qty") > 0)
+        )
         .withWatermark("ts", WATERMARK)
     )
 
@@ -185,11 +216,7 @@ def kafka_wire_file_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     downstream tested against the exact wire contract, so production
     is `spark.readStream.format("kafka").option("subscribe", ...)
     .load()` in place of this call — nothing else moves."""
-    return (
-        spark.readStream.schema(KAFKA_WIRE_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(src_dir)
-    )
+    return _file_stream(spark, src_dir, KAFKA_WIRE_SCHEMA, "json")
 
 
 def stream_events_kafka(spark: SparkSession, src_dir: str) -> DataFrame:
@@ -435,11 +462,7 @@ def quality_filter_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     not apply here)."""
     from zcode_iceberg_spark.operators import text as tx
 
-    raw = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
+    raw = _file_stream(spark, src_dir, DOC_SCHEMA)
     return tx.quality_filter(raw)
 
 
@@ -455,11 +478,7 @@ def dedup_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     column bounds it with ``dropDuplicatesWithinWatermark`` (the
     fixture documents carry no timestamp, so the unbounded form is
     the honest mapping)."""
-    raw = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
+    raw = _file_stream(spark, src_dir, DOC_SCHEMA)
     return raw.select(
         "doc_id", "source", F.md5("text").alias("content_hash")
     ).dropDuplicates(["content_hash"])
@@ -496,20 +515,9 @@ def passage_dedup_stream(
     rewrites its own partition instead of appending duplicates, making
     the pipeline effectively exactly-once under the checkpoint.
     Returns the started StreamingQuery."""
-    raw = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        passage_dedup_step(batch_df, epoch_id, ledger_dir, out_dir, width)
-
-    return (
-        raw.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    raw = _file_stream(spark, src_dir, DOC_SCHEMA)
+    return _drain_epochs(
+        raw, passage_dedup_step, checkpoint, ledger_dir, out_dir, width
     )
 
 
@@ -595,21 +603,8 @@ def substring_dedup_stream(
     foreachBatch replay rewrites its own partition instead of
     double-appending (effectively exactly-once under the checkpoint).
     Returns the started StreamingQuery."""
-    raw = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        substring_dedup_step(batch_df, epoch_id, ledger_dir, out_dir)
-
-    return (
-        raw.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    raw = _file_stream(spark, src_dir, DOC_SCHEMA)
+    return _drain_epochs(raw, substring_dedup_step, checkpoint, ledger_dir, out_dir)
 
 
 def substring_dedup_step(
@@ -676,23 +671,14 @@ def ledger_delete_stream(
     StreamingQuery."""
     from zcode_iceberg_spark.sources.sinks import ledger_delete
 
-    raw = (
-        spark.readStream.schema(req_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(req_dir)
-    )
+    raw = _file_stream(spark, req_dir, req_schema)
 
     def step(batch_df: DataFrame, _epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
         ledger_delete(batch_df.sparkSession, ledger_dir, batch_df, key)
 
-    return (
-        raw.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_epochs(raw, step, checkpoint)
 
 
 EMB_SCHEMA = T.StructType(
@@ -830,17 +816,7 @@ def holt_stream(
     batch query on every finalized bar is pinned in
     tests/test_streaming.py. Returns the started query."""
     bars = tumbling_ohlc_stream(stream_events(spark, src_dir))
-
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        holt_stream_step(batch_df, epoch_id, out_dir, state_dir)
-
-    return (
-        bars.writeStream.foreachBatch(step)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_epochs(bars, holt_stream_step, checkpoint, out_dir, state_dir)
 
 
 def cms_ingest_step(batch_df: DataFrame, epoch_id: int, cells_dir: str) -> None:
@@ -864,21 +840,8 @@ def cms_ingest_stream(
     micro-batch appends its epoch's cell table; the merged sketch
     (cell-wise sum over epochs) equals the one-shot batch sketch for
     ANY batch split — counts add. Returns the started query."""
-    raw = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        cms_ingest_step(batch_df, epoch_id, cells_dir)
-
-    return (
-        raw.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    raw = _file_stream(spark, src_dir, DOC_SCHEMA)
+    return _drain_epochs(raw, cms_ingest_step, checkpoint, cells_dir)
 
 
 def bloom_ingest_step(batch_df: DataFrame, epoch_id: int, bits_dir: str) -> None:
@@ -914,21 +877,8 @@ def bloom_ingest_stream(
     was split into batches (OR is associative+commutative) — the
     agreement test pins it — and crash replay is idempotent by
     algebra. Returns the started query."""
-    raw = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        bloom_ingest_step(batch_df, epoch_id, bits_dir)
-
-    return (
-        raw.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    raw = _file_stream(spark, src_dir, DOC_SCHEMA)
+    return _drain_epochs(raw, bloom_ingest_step, checkpoint, bits_dir)
 
 
 def ann_index_stream(
@@ -949,21 +899,8 @@ def ann_index_stream(
     Batch warmup and live stream share one code path, the A4
     warmup/stream duality (reference: data_manager.py:191-196)
     applied to vector ingest. Returns the started StreamingQuery."""
-    raw = (
-        spark.readStream.schema(EMB_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        ann_index_step(batch_df, epoch_id, cents_dir, index_dir)
-
-    return (
-        raw.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    raw = _file_stream(spark, src_dir, EMB_SCHEMA)
+    return _drain_epochs(raw, ann_index_step, checkpoint, cents_dir, index_dir)
 
 
 def ann_index_state(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -1096,25 +1033,11 @@ def scd2_stream(
     time-split files oldest-first). Returns the started query."""
     # stream_events carries the SAME normalization/validity projection
     # as the batch loader (events_ticks), so the streamed version table
-    # sees byte-identical inputs to the q_scd2_versions oracle — the
-    # one rule events_ticks adds on top (ts IS NOT NULL) is restated
-    # here because the watermark does not filter batch rows inside
-    # foreachBatch
-    ev = (
-        stream_events(spark, src_dir)
-        .filter(F.col("ts").isNotNull())
-        .select("event_id", "ts", "user_id", "event_type")
+    # sees byte-identical inputs to the q_scd2_versions oracle
+    ev = stream_events(spark, src_dir).select(
+        "event_id", "ts", "user_id", "event_type"
     )
-
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        scd2_step(batch_df, epoch_id, table_dir)
-
-    return (
-        ev.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_epochs(ev, scd2_step, checkpoint, table_dir)
 
 
 def dedup_stream_bounded(spark: SparkSession, src_dir: str) -> DataFrame:

@@ -17,9 +17,6 @@ prior run left behind.
 
 from __future__ import annotations
 
-import hashlib
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -27,7 +24,7 @@ from pyspark.sql import types as T
 from zcode_iceberg_spark.operators.text import word_hash
 from zcode_iceberg_spark.sources.tables import load_table
 from zcode_iceberg_spark.suite import Query
-from zcode_iceberg_spark.suite.llm import WORD_HASH_SQL
+from zcode_iceberg_spark.suite.llm import WORD_HASH_SQL, _build_scratch
 
 DOC_SCHEMA = T.StructType(
     [
@@ -43,16 +40,8 @@ N_SHARDS = 4
 
 
 def _scratch(sf_dir: str, fmt: str) -> str:
-    # keyed to (corpus, format, PROCESS): each run rewrites the dir,
-    # so concurrent same-corpus processes must not share one; orphans
-    # from dead processes are swept on the way
-    import os
-
-    from zcode_iceberg_spark.suite.llm import sweep_dead_scratch
-
-    sweep_dead_scratch("zspark_fmt_")
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    return f"{tempfile.gettempdir()}/zspark_fmt_{fmt}_{tag}_p{os.getpid()}"
+    # keyed to (corpus, format, PROCESS): each run rewrites the dir
+    return _build_scratch(f"zspark_fmt_{fmt}_", sf_dir)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -62,7 +62,12 @@ from pyspark.sql import functions as F
 
 from zcode_iceberg_spark.sources.tables import load_table
 from zcode_iceberg_spark.suite import Query
-from zcode_iceberg_spark.suite.llm import INCR_SPLIT_FRAC, _reuse
+from zcode_iceberg_spark.suite.llm import (
+    INCR_SPLIT_FRAC,
+    _build_scratch,
+    _near_canon_state,
+    _reuse,
+)
 
 # ------------------------------------------------------------------ bloom
 
@@ -189,24 +194,6 @@ def q_dedup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _bloom_exact_verify(cand, hist)
 
 
-def sweep_dead_bloom_scratch() -> None:
-    from zcode_iceberg_spark.suite.llm import sweep_dead_scratch
-
-    sweep_dead_scratch("zspark_bloom_state_")
-
-
-def _bloom_state_dir(sf_dir: str) -> str:
-    """PID-keyed scratch for the persisted Bloom byte table (same
-    concurrent-process isolation contract as llm._hash_state_dir)."""
-    import hashlib as _hl
-    import os
-    import tempfile
-
-    sweep_dead_bloom_scratch()
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:10]
-    return f"{tempfile.gettempdir()}/zspark_bloom_state_{tag}_p{os.getpid()}"
-
-
 def bloom_table_fingerprint(bits: DataFrame) -> tuple:
     """Order-free fingerprint of a Bloom byte table (row count, mask
     sum, key-weighted mask sum) — enough to detect ANY single-byte
@@ -271,7 +258,9 @@ def q_dedup_bloom_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     text OR historical hashes for the probe (the exact-verify column
     remains the audit)."""
     hist, new, _ = _bloom_split(spark, sf_dir)
-    bits_dir, _ = build_bloom_state(spark, sf_dir, _bloom_state_dir(sf_dir))
+    bits_dir, _ = build_bloom_state(
+        spark, sf_dir, _build_scratch("zspark_bloom_state_", sf_dir)
+    )
     cand = bloom_probe(new, spark.read.parquet(bits_dir))
     return _bloom_exact_verify(cand, hist)
 
@@ -431,18 +420,6 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cms_estimate(_cms_exact_topk(toks), cms_cells(toks))
 
 
-def _cms_state_dir(sf_dir: str) -> str:
-    import hashlib as _hl
-    import os
-    import tempfile
-
-    from zcode_iceberg_spark.suite.llm import sweep_dead_scratch
-
-    sweep_dead_scratch("zspark_cms_state_")
-    tag = _hl.md5(sf_dir.encode()).hexdigest()[:10]
-    return f"{tempfile.gettempdir()}/zspark_cms_state_{tag}_p{os.getpid()}"
-
-
 def read_cms(spark: SparkSession, cells_dir: str) -> DataFrame:
     """Fold the per-epoch cell tables into ONE sketch: cell-wise sum
     over everything under ``cells_dir`` — the re-aggregation that
@@ -470,7 +447,7 @@ def q_cms_heavy_hitters_persisted(spark: SparkSession, sf_dir: str) -> DataFrame
     import shutil as _shutil
     from pathlib import Path as _Path
 
-    state = _cms_state_dir(sf_dir)
+    state = _build_scratch("zspark_cms_state_", sf_dir)
     if _Path(state).exists():
         _shutil.rmtree(state)
     d = load_table(spark, sf_dir, "documents")
@@ -1334,13 +1311,17 @@ QUERIES = {
     "ols_regression": Query(q_ols_regression, SQL_OLS_REGRESSION),
     "ols_by_segment": Query(q_ols_by_segment, SQL_OLS_BY_SEGMENT),
     "dedup_quality_keeper": Query(
-        q_dedup_quality_keeper, _sql_dedup_quality_keeper()
+        q_dedup_quality_keeper,
+        _sql_dedup_quality_keeper(),
+        state=_near_canon_state,
     ),
     "token_budget_mix": Query(q_token_budget_mix, SQL_TOKEN_BUDGET_MIX),
     "decontaminate_bloom": Query(
         q_decontaminate_bloom, _sql_decontaminate_bloom()
     ),
     "cluster_safe_split": Query(
-        q_cluster_safe_split, _sql_cluster_safe_split()
+        q_cluster_safe_split,
+        _sql_cluster_safe_split(),
+        state=_near_canon_state,
     ),
 }
