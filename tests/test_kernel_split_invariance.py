@@ -12,7 +12,10 @@ Audit map (r10 #3) — every stateful streaming kernel and where its
 invariance is proven:
 
 - _zscore_step + live FSM fusion — RANGE-frame twin, holdback fix:
-  tests/test_zscore_kernel.py (+ mid-tie-split Spark fixture);
+  tests/test_zscore_kernel.py (+ mid-tie-split Spark fixture); the
+  fused live step (_live_step, the per-key transition of
+  live_decisions_fsm_stream) — HERE, chained with its packed state
+  tuple and a final timed-out flush;
 - _hysteresis_fold, _fsm_step, iceberg_refill_step, funnel_step,
   transitions_step, cusum_step, gap_fill_step (data path),
   holt_step_dec — HERE, pure pandas, 3 seeds × 100 examples each;
@@ -41,6 +44,8 @@ from hypothesis import given, seed, settings, strategies as st
 from zcode_iceberg_spark.operators.stateful import _fsm_step, _hysteresis_fold
 from zcode_iceberg_spark.operators.timeseries import holt_step_dec
 from zcode_iceberg_spark.streaming.pipeline import (
+    LIVE_STATE_SCHEMA,
+    _live_step,
     cusum_step,
     funnel_step,
     gap_fill_step,
@@ -144,6 +149,87 @@ def test_fsm_split_invariance(hseed):
         assert chained_st == one_st
 
     prop()
+
+
+# ------------------------------------------------ fused live operator
+
+live_ticks = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=900),  # seconds: forces ties
+        st.floats(min_value=97.0, max_value=103.0, allow_nan=False),
+        st.floats(min_value=0.01, max_value=50.0, allow_nan=False),
+        st.booleans(),  # is_buy
+        st.booleans(),  # entry_signal
+    ),
+    min_size=40,  # past the z kernel's 30-row minimum population
+    max_size=100,
+)
+
+_PY_TYPE = {
+    "LongType": int, "IntegerType": int, "DoubleType": float,
+    "StringType": str, "BooleanType": bool,
+}
+
+
+def _conforms(state, schema):
+    """Arity and field order of a carried tuple against its state
+    schema: every value has the Python type its field stores."""
+    assert len(state) == len(schema.fields)
+    for v, f in zip(state, schema.fields):
+        t = f.dataType
+        if type(t).__name__ == "ArrayType":
+            want = _PY_TYPE[type(t.elementType).__name__]
+            assert isinstance(v, list), f.name
+            assert all(type(x) is want for x in v), f.name
+        else:
+            assert type(v) is _PY_TYPE[type(t).__name__], f.name
+
+
+@seed_matrix
+def test_live_step_split_invariance(hseed):
+    """Chaining the fused live step over arbitrary micro-batch cuts —
+    including cuts inside a same-ts group — and a final timed-out flush
+    closes the same trades as one call on all rows plus the flush, and
+    every carried tuple matches LIVE_STATE_SCHEMA."""
+    key = (7,)
+    n_trades = 0
+
+    def run(pdf, bounds):
+        state, ledger = None, []
+        for a, b in zip(bounds, bounds[1:]):
+            rows, state = _live_step(key, [pdf[a:b]], state)
+            _conforms(state, LIVE_STATE_SCHEMA)
+            ledger.extend(rows)
+        rows, state = _live_step(key, [], state, timed_out=True)
+        _conforms(state, LIVE_STATE_SCHEMA)
+        assert state[LIVE_STATE_SCHEMA.fieldNames().index("pend_ts_us")] == []
+        return ledger + rows, state
+
+    @seed(hseed)
+    @settings(max_examples=100, deadline=None, database=None)
+    @given(live_ticks, st.data())
+    def prop(raw, data):
+        nonlocal n_trades
+        rows = sorted((t, i, *rest) for i, (t, *rest) in enumerate(raw))
+        pdf = pd.DataFrame(
+            {
+                "user_id": key[0],
+                "ts": pd.to_datetime([r[0] for r in rows], unit="s"),
+                "event_id": [r[1] for r in rows],
+                "price": [r[2] for r in rows],
+                "qty": [r[3] for r in rows],
+                "is_buy": [r[4] for r in rows],
+                "entry_signal": [r[5] for r in rows],
+            }
+        )
+        one, one_state = run(pdf, [0, len(rows)])
+        chained, state = run(pdf, _cuts(data, len(rows)))
+        assert chained == one
+        assert state == one_state
+        n_trades += len(one)
+
+    prop()
+    assert n_trades > 0  # the property is not vacuous
 
 
 # ------------------------------------------------------- iceberg refill

@@ -778,28 +778,183 @@ def test_iceberg_refill_stream_matches_batch(spark, sf_dir):
     assert one == two and one["n_refills"] == 1 and one["refill_qty"] == 4.5
 
 
-def test_iceberg_refill_step_chunk_order_invariance():
-    """The fold must concat a group's Arrow chunks BEFORE sorting:
-    chunk boundaries don't respect event order, so per-chunk folding
-    would corrupt the lag comparisons. Feeding the chunks reversed and
-    interleaved must equal the single-chunk result."""
+def _chunk_order_case(name):
+    """(step, key, one event-ordered frame) for every step that orders
+    its rows through ``_ordered_rows``. Timestamps tie in pairs so the
+    event_id tie-break is exercised too."""
+    from functools import partial
+
     import pandas as pd
 
-    from zcode_iceberg_spark.streaming import iceberg_refill_step
+    from zcode_iceberg_spark.streaming import pipeline as pl
 
-    rows = pd.DataFrame(
-        {"event_id": [1, 2, 3, 4, 5, 6], "qty": [5.0, 2.0, 6.5, 1.0, 3.0, 0.5]}
+    ts_s = [0, 10, 10, 4000, 4000, 9000]
+    base = pd.DataFrame(
+        {
+            "user_id": 7,
+            "ts": pd.to_datetime(ts_s, unit="s"),
+            "ts_us": [t * 1_000_000 for t in ts_s],
+            "event_id": [1, 2, 3, 4, 5, 6],
+        }
     )
-    want, _ = iceberg_refill_step(("u", "bid", 7), [rows], None)
+    cols = {
+        "iceberg_refill": (
+            pl.iceberg_refill_step, ("u", "bid", 7),
+            {"qty": [5.0, 2.0, 6.5, 1.0, 3.0, 0.5]},
+        ),
+        "funnel": (
+            partial(pl.funnel_step, window_us=6 * 3600 * 1_000_000), (7,),
+            {"event_type": ["view", "click", "view", "purchase", "click",
+                            "purchase"]},
+        ),
+        "transitions": (
+            pl.transitions_step, (7,),
+            {"event_type": ["view", "click", "view", "purchase", "click",
+                            "purchase"]},
+        ),
+        "cusum": (
+            partial(pl.cusum_step, k=0.5, h=1.0), (7,),
+            {"x": [1.5, -0.2, 2.0, -3.0, 0.7, 1.1]},
+        ),
+        "gap_fill": (
+            pl.gap_fill_step, (7,),
+            {"price": [10.0, 11.0, 12.0, 9.0, 9.5, 13.0],
+             "qty": [1.0, 2.0, 3.0, 4.0, 5.0, 6.0]},
+        ),
+        "hysteresis": (
+            partial(pl._hysteresis_step, confirm_k=2), (7,),
+            {"raw_label": ["UP", "UP", "DOWN", "DOWN", "UP", "UP"]},
+        ),
+        "position": (
+            partial(
+                pl._position_step, z_entry=1.5, tp_pct=0.01, sl_pct=0.01,
+                max_hold_secs=86400.0, margin=50.0, leverage=25.0,
+            ),
+            (7,),
+            {"price": [100.0, 100.0, 100.5, 102.0, 99.0, 100.0],
+             "z": [0.0, 2.0, 0.0, 0.0, -2.0, 0.0]},
+        ),
+    }
+    step, key, extra = cols[name]
+    return step, key, base.assign(**extra)
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["iceberg_refill", "funnel", "transitions", "cusum", "gap_fill",
+     "hysteresis", "position"],
+)
+def test_step_chunk_order_invariance(name):
+    """Every ordered step must concat a key's Arrow chunks BEFORE
+    sorting: chunk boundaries don't respect event order, so per-chunk
+    folding would corrupt the carried state. Feeding the chunks
+    reversed and interleaved must equal the single-chunk result."""
+    import pandas as pd
+
+    step, key, rows = _chunk_order_case(name)
+
+    def run(chunks):
+        out, state = step(key, chunks, None)
+        if isinstance(out, pd.DataFrame):
+            out = out.to_dict("records")
+        return out, repr(state)  # repr: NaN state sentinels compare
+
+    want = run([rows])
+    assert want[0]  # every case emits rows
     # reversed chunk order: later event_ids arrive in the FIRST chunk
-    got_rev, _ = iceberg_refill_step(
-        ("u", "bid", 7), [rows.iloc[3:], rows.iloc[:3]], None
-    )
+    assert run([rows.iloc[3:], rows.iloc[:3]]) == want
     # interleaved: odd rows then even rows
-    got_mix, _ = iceberg_refill_step(
-        ("u", "bid", 7), [rows.iloc[1::2], rows.iloc[0::2]], None
+    assert run([rows.iloc[1::2], rows.iloc[0::2]]) == want
+
+
+class _FoldCapture:
+    """Stands in for a streaming DataFrame: records the per-key
+    function and timeout mode a stream hands to
+    applyInPandasWithState, so ``_keyed_fold`` runs without
+    Spark."""
+
+    def select(self, *cols):
+        return self
+
+    def groupBy(self, *keys):
+        return self
+
+    def applyInPandasWithState(self, fn, out_schema, state_schema, mode, timeout):
+        self.fn, self.timeout = fn, timeout
+        return self
+
+
+class _FakeState:
+    """The GroupState surface ``_keyed_fold`` uses."""
+
+    def __init__(self, value=None, timed_out=False, watermark_ms=0):
+        self.value, self.hasTimedOut = value, timed_out
+        self.watermark_ms, self.timer, self.removed = watermark_ms, None, False
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def getCurrentWatermarkMs(self):
+        return self.watermark_ms
+
+    def update(self, value):
+        self.value = value
+
+    def remove(self):
+        self.value, self.removed = None, True
+
+    def setTimeoutTimestamp(self, ms):
+        self.timer = ms
+
+
+def test_staleness_timer_contract(monkeypatch):
+    """The staleness stream's timers without Spark: data arms the
+    deadline max_silence_sec past the newest event; a straggler whose
+    deadline already trails the watermark is clamped to watermark + 1;
+    a timeout emits exactly one `stale` row and returns no state, so
+    ``_keyed_fold`` removes the key and arms nothing."""
+    from types import SimpleNamespace
+
+    import pandas as pd
+
+    from zcode_iceberg_spark.streaming import pipeline as pl
+
+    monkeypatch.setattr(
+        pl, "ts_micros", lambda col="ts": SimpleNamespace(alias=lambda n: n)
     )
-    assert want == got_rev == got_mix
+    cap = pl.staleness_stream(_FoldCapture(), max_silence_sec=300)
+    assert cap.timeout == "EventTimeTimeout"
+
+    def ticks(*secs):
+        return pd.DataFrame(
+            {"user_id": 2, "ts_us": [s * 1_000_000 for s in secs]}
+        )
+
+    def call(state, *chunks):
+        out = list(cap.fn((2,), iter(chunks), state))
+        return pd.concat(out).to_dict("records") if out else []
+
+    st = _FakeState(watermark_ms=0)
+    rows = call(st, ticks(5), ticks(1))
+    assert rows == [{"user_id": 2, "kind": "live", "last_us": 5_000_000,
+                     "n_events": 2}]
+    assert st.value == (5_000_000, 2) and st.timer == 5_000 + 300_000
+
+    late = _FakeState((5_000_000, 2), watermark_ms=10_000_000)
+    call(late, ticks(6))
+    assert late.value == (6_000_000, 3) and late.timer == 10_000_001
+
+    rows, new_state = pl._staleness_step((2,), [], (6_000_000, 3), timed_out=True)
+    assert new_state is None
+    fired = _FakeState((6_000_000, 3), timed_out=True, watermark_ms=20_000_000)
+    assert call(fired) == [{"user_id": 2, "kind": "stale",
+                            "last_us": 6_000_000, "n_events": 3}]
+    assert fired.removed and fired.timer is None
 
 
 def test_iceberg_refill_stream_tiny_arrow_batches(spark, sf_dir):

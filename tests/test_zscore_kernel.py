@@ -2,12 +2,12 @@
 (streaming/pipeline.py:_zscore_step) — pure pandas, no Spark session:
 
 1. batch-boundary INVARIANCE (VERDICT r10 #1): splitting one ordered
-   tick stream at arbitrary points and chaining the carried state
-   through the wrapper's tie-group holdback (_tie_holdback + final
-   timeout flush — exactly what zscore_stream / the fused live
-   pipeline do per micro-batch) must produce the exact z sequence
-   one-shot processing produces, INCLUDING cuts that land inside a
-   same-timestamp tie group (the round-10 falsifier);
+   tick stream at arbitrary points and chaining zscore_stream's
+   per-key step (_zscore_stream_step: tie-group holdback + kernel)
+   with its packed state tuple, then a timed-out flush, must produce
+   the exact z sequence one-shot processing produces, INCLUDING cuts
+   that land inside a same-timestamp tie group (the round-10
+   falsifier);
 2. formula equivalence: the kernel's z equals an independent
    recomputation of the batch definition (value-inclusive 600 s
    range-window delta, trailing-50 avg, Welford population sigma,
@@ -29,7 +29,11 @@ import pandas as pd
 import pytest
 from hypothesis import given, seed, settings, strategies as st
 
-from zcode_iceberg_spark.streaming.pipeline import _tie_holdback, _zscore_step
+from zcode_iceberg_spark.streaming.pipeline import (
+    _tie_holdback,
+    _zscore_step,
+    _zscore_stream_step,
+)
 
 WIN_SEC = 600
 POP = 50
@@ -43,6 +47,7 @@ def _mk_pdf(rows):
         {
             "ts": pd.to_datetime([r[0] for r in rows], unit="s"),
             "event_id": [r[1] for r in rows],
+            "price": 100.0,
             "qty": [r[2] for r in rows],
             "is_buy": [r[3] for r in rows],
         }
@@ -97,21 +102,15 @@ def _canon(raw):
 
 
 def _chain_with_holdback(rows, bounds):
-    """Replay `rows` cut at `bounds` through the EXACT per-batch
-    discipline the streaming wrappers use: pending + batch →
-    _tie_holdback → kernel on the complete prefix; then the quiet-key
+    """Replay `rows` cut at `bounds` through zscore_stream's per-key
+    step, threading its packed state tuple; then the quiet-key
     timeout flush pushes the final pending group through the kernel."""
-    state = ([], [], [])
-    pend = _mk_pdf([])
-    chained = []
+    state, chained = None, []
     for a, b in zip(bounds, bounds[1:]):
-        if a == b:
-            continue  # empty micro-batch is a no-op
-        ready, pend = _tie_holdback(pend, _mk_pdf(rows[a:b]))
-        zs, state = _zscore_step(ready, state)
-        chained.extend(zs)
-    zs, state = _zscore_step(pend, state)  # event-time-timeout flush
-    chained.extend(zs)
+        out, state = _zscore_stream_step((1,), [_mk_pdf(rows[a:b])], state)
+        chained.extend(out["z"])
+    out, state = _zscore_stream_step((1,), [], state, timed_out=True)
+    chained.extend(out["z"])
     return chained
 
 

@@ -26,19 +26,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from zcode_iceberg_spark.functions.scalar import clamp
+from zcode_iceberg_spark.sources.tables import ts_micros as _us
 
 KEY = "user_id"
-
-
-def _us(col: str = "ts"):
-    """Event time as epoch microseconds — RANGE frames need a numeric
-    order key; microseconds preserve full ordering. The NTZ-hop cast
-    tolerates TIMESTAMP_NTZ inputs (``unix_micros`` rejects NTZ;
-    session timezone is UTC so the hop is value-preserving) while an
-    un-normalized int64-nanos long still fails analysis loudly — a
-    direct ``cast('timestamp')`` would silently read it as epoch
-    SECONDS (far-future values, wrong windows)."""
-    return F.unix_micros(F.col(col).cast("timestamp_ntz").cast("timestamp"))
 
 
 def taker_delta(ticks: DataFrame, window_sec: int = 600) -> DataFrame:

@@ -27,17 +27,12 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from zcode_iceberg_spark.sources.tables import ts_micros as _us
+
 KEY = "user_id"
-
-
-def _us(col: str = "ts") -> Column:
-    # NTZ-hop tolerates TIMESTAMP_NTZ (session tz UTC → lossless) but
-    # still rejects an un-normalized int64-nanos long at analysis time
-    # (a direct timestamp cast would read it as epoch seconds)
-    return F.unix_micros(F.col(col).cast("timestamp_ntz").cast("timestamp"))
 
 
 def ohlc_bars(ticks: DataFrame, minutes: int = 60) -> DataFrame:

@@ -21,7 +21,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 TABLES = [
@@ -67,6 +67,18 @@ def normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     if dtype == "timestamp_ntz":
         return df.withColumn(col, F.col(col).cast("timestamp"))
     return df
+
+
+def ts_micros(col: str = "ts") -> Column:
+    """Event time as epoch microseconds — the numeric order key of RANGE
+    frames, bucket arithmetic and the streaming folds. The NTZ hop
+    tolerates a TIMESTAMP_NTZ column that bypassed ``normalize_ts``
+    (``unix_micros`` rejects NTZ; the session timezone is UTC, so the
+    hop is value-preserving) while an un-normalized int64-nanos long
+    still fails analysis loudly — a direct ``cast('timestamp')`` would
+    silently read it as epoch SECONDS (far-future values, wrong
+    windows)."""
+    return F.unix_micros(F.col(col).cast("timestamp_ntz").cast("timestamp"))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

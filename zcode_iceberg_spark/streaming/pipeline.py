@@ -21,11 +21,31 @@ aggregation expressions run under watermarks:
 Scale: streaming state is per-key-and-window in the state store;
 watermarks bound it. File source → Kafka source is a one-line swap
 (same schema contract).
+
+Keyed-fold contract. Every stateful stream here is one pure per-key
+transition ``step(key, pdfs, prior) -> (rows, new_state)`` run by
+``_keyed_fold``, the only place that touches GroupState:
+
+- ordering: a key's micro-batch rows can span several Arrow chunks,
+  and chunk boundaries do not respect event order, so every
+  order-dependent step concatenates ALL chunks before sorting
+  (``_ordered_rows``) — by (ts, event_id) unless its batch twin
+  orders otherwise;
+- state: ``prior`` is the stored tuple in the ``*_STATE_SCHEMA`` field
+  order (None for a new key); the new state is written BEFORE the
+  output frame is yielded, so correctness never depends on the engine
+  draining the generator; a ``None`` new state removes the key;
+- timers: a fold given ``deadline`` runs under EventTimeTimeout, its
+  step also receives ``timed_out`` and ``watermark_ms``, and the timer
+  is re-armed on every call at ``max(deadline(new_state), watermark +
+  1)`` — Spark rejects a timestamp at or behind the watermark, and a
+  past deadline (a late straggler, a held-back tie group) then fires
+  at the next watermark advance.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 
 import pandas as pd
 
@@ -34,10 +54,10 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 from zcode_iceberg_spark.operators.stateful import _hysteresis_fold
-from zcode_iceberg_spark.sources.tables import normalize_ts
+from zcode_iceberg_spark.sources.tables import normalize_ts, ts_micros
 
 # Current driver layout: ts is parquet timestamp[us] tz-naive → NTZ.
 # stream_events sniffs the real on-disk schema (footer-only batch read)
@@ -269,6 +289,57 @@ def tumbling_ohlc_stream(ticks: DataFrame, minutes: int = 60) -> DataFrame:
     )
 
 
+def _ordered_rows(pdfs, order=("ts", "event_id")) -> pd.DataFrame | None:
+    """A key's micro-batch rows in event order, or None when the call
+    delivered no rows. Concatenates every chunk BEFORE sorting (see the
+    module docstring); the stable sort keeps arrival order on ties."""
+    chunks = [pdf for pdf in pdfs if len(pdf)]
+    if not chunks:
+        return None
+    return pd.concat(chunks).sort_values(list(order), kind="mergesort")
+
+
+def _keyed_fold(
+    df: DataFrame, keys, step, out_schema, state_schema, deadline=None
+) -> DataFrame:
+    """THE GroupState plumbing of every stateful stream (contract in the
+    module docstring): group ``df`` by ``keys`` and fold each key's
+    micro-batches through ``step``. ``rows`` may be a DataFrame, a list
+    of row dicts or tuples, or one row dict; it is emitted as one frame
+    in ``out_schema`` column order (nothing is emitted for no rows)."""
+    cols = out_schema.fieldNames()
+
+    def fn(key, pdfs, state):
+        prior = state.get if state.exists else None
+        if deadline is None:
+            rows, new_state = step(key, pdfs, prior)
+        else:
+            wm = state.getCurrentWatermarkMs()
+            rows, new_state = step(
+                key, pdfs, prior, timed_out=state.hasTimedOut, watermark_ms=wm
+            )
+        if new_state is None:
+            state.remove()
+        else:
+            state.update(new_state)
+            at = deadline(new_state) if deadline is not None else None
+            if at is not None:
+                state.setTimeoutTimestamp(max(at, wm + 1))
+        if isinstance(rows, dict):
+            rows = [rows]
+        if len(rows):
+            yield pd.DataFrame(rows, columns=cols)
+
+    timeout = (
+        GroupStateTimeout.NoTimeout
+        if deadline is None
+        else GroupStateTimeout.EventTimeTimeout
+    )
+    return df.groupBy(*keys).applyInPandasWithState(
+        fn, out_schema, state_schema, "append", timeout
+    )
+
+
 HYST_STATE_SCHEMA = T.StructType(
     [
         T.StructField("confirmed", T.StringType()),
@@ -287,47 +358,38 @@ HYST_OUT_SCHEMA = T.StructType(
 )
 
 
+def _hysteresis_step(key, pdfs, prior, confirm_k: int = 2):
+    """Per-key k-confirmation fold: carried (confirmed, pending, count),
+    pending "" = none."""
+    confirmed, pending, count = prior if prior is not None else ("RANGE", "", 0)
+    rows = _ordered_rows(pdfs)
+    if rows is None:
+        return [], (confirmed, pending, count)
+    labs, _, (confirmed, pending, count) = _hysteresis_fold(
+        rows["raw_label"], confirm_k, confirmed, pending or None, count
+    )
+    out = pd.DataFrame(
+        {
+            "user_id": rows["user_id"].values,
+            "event_id": rows["event_id"].values,
+            "raw_label": rows["raw_label"].values,
+            "confirmed_label": labs,
+        }
+    )
+    return out, (confirmed, pending or "", count)
+
+
 def hysteresis_stream(
     labeled: DataFrame, confirm_k: int = 2, z_up: float = 1.0, z_dn: float = -1.0
 ) -> DataFrame:
     """G16/H5 streaming twin: k-confirmation trend flips with carried
     GroupState. Input: ticks with a ``raw_label`` column."""
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            confirmed, pending_s, count = state.get
-            pending = pending_s or None
-        else:
-            confirmed, pending, count = "RANGE", None, 0
-        # concat BEFORE sorting: a group's rows can span multiple Arrow
-        # chunks, and per-chunk sorts would fold out of global event
-        # order (chunk 2 may hold earlier event_ids than chunk 1)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks).sort_values(
-                ["ts", "event_id"], kind="mergesort"
-            )
-            labs, _, (confirmed, pending, count) = _hysteresis_fold(
-                pdf["raw_label"], confirm_k, confirmed, pending, count
-            )
-            yield pd.DataFrame(
-                {
-                    "user_id": pdf["user_id"].values,
-                    "event_id": pdf["event_id"].values,
-                    "raw_label": pdf["raw_label"].values,
-                    "confirmed_label": labs,
-                }
-            )
-        state.update((confirmed, pending if pending is not None else "", count))
-
-    return labeled.groupBy("user_id").applyInPandasWithState(
-        fn,
+    return _keyed_fold(
+        labeled,
+        ["user_id"],
+        partial(_hysteresis_step, confirm_k=confirm_k),
         HYST_OUT_SCHEMA,
         HYST_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
     )
 
 
@@ -366,20 +428,15 @@ def iceberg_refill_step(
     with the batch query on every value."""
     import math
 
-    import pandas as pd
-
     if state_tuple is not None:
         prev, n, nr, ru, mx = state_tuple
         prev = None if math.isnan(prev) else prev
     else:
         prev, n, nr, ru, mx = None, 0, 0, 0, float("-inf")
-    # concat BEFORE sorting: a group's micro-batch rows can span
-    # multiple Arrow chunks, and per-chunk sorts would fold out of
-    # global event order (wrong lag comparisons, corrupted carry-state)
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        allrows = pd.concat(chunks).sort_values("event_id", kind="mergesort")
-        for q in allrows["qty"]:
+    # the batch twin orders a level's rows by event_id alone
+    rows = _ordered_rows(pdfs, ["event_id"])
+    if rows is not None:
+        for q in rows["qty"]:
             q = float(q)
             n += 1
             if q > mx:
@@ -411,8 +468,6 @@ def iceberg_refill_stream(ticks: DataFrame) -> DataFrame:
     replenishing. State is 5 scalars per touched level; at scale it is
     bounded by the touched price grid per key (and a production feed
     would expire idle levels via timeouts)."""
-    import pandas as pd
-
     lv = ticks.select(
         "user_id",
         F.when(F.col("is_buy"), F.lit("bid")).otherwise(F.lit("ask")).alias("side"),
@@ -420,20 +475,12 @@ def iceberg_refill_stream(ticks: DataFrame) -> DataFrame:
         "qty",
         "event_id",
     )
-
-    def fn(key, pdfs, state):
-        row, new_state = iceberg_refill_step(
-            key, pdfs, state.get if state.exists else None
-        )
-        state.update(new_state)
-        yield pd.DataFrame([row])
-
-    return lv.groupBy("user_id", "side", "lvl").applyInPandasWithState(
-        fn,
+    return _keyed_fold(
+        lv,
+        ["user_id", "side", "lvl"],
+        iceberg_refill_step,
         ICE_OUT_SCHEMA,
         ICE_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
     )
 
 
@@ -1133,6 +1180,29 @@ def _tie_holdback(
     return pdf[done], pdf[~done]
 
 
+def _holdback_release(
+    pend: pd.DataFrame, batch: pd.DataFrame | None, timed_out: bool
+) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """One call's ``(ready, new_pending)`` for a tie-holdback fold:
+    new rows go through ``_tie_holdback``; a timeout (the key sat out a
+    watermark advance) releases the held group, which under in-order
+    per-key delivery is complete; a call with neither keeps it held —
+    the group may still be mid-flight."""
+    if batch is not None:
+        return _tie_holdback(pend, batch)
+    if timed_out:
+        return pend, pend.iloc[0:0]
+    return pend.iloc[0:0], pend
+
+
+def _release_deadline(state_schema):
+    """Timer of a tie-holdback fold: while rows are held back, fire at
+    the next watermark advance (-1 is always past, so ``_keyed_fold``
+    clamps it to watermark + 1); no timer otherwise."""
+    i = state_schema.fieldNames().index("pend_ts_us")
+    return lambda st: -1 if len(st[i]) else None
+
+
 def _zscore_step(
     pdf: pd.DataFrame,
     state: tuple[list, list, list],
@@ -1245,6 +1315,34 @@ def _pend_pack(pend: pd.DataFrame, with_sig: bool = False) -> tuple:
     return packed
 
 
+_ZS_COLS = ["ts", "event_id", "price", "qty", "is_buy"]
+
+
+def _zscore_stream_step(key, pdfs, prior, timed_out=False, watermark_ms=-1):
+    """Per-key ``zscore_stream`` transition over the ``ZS_STATE_SCHEMA``
+    tuple: release complete ts-groups through ``_holdback_release``
+    and z-score them."""
+    if prior is None:
+        prior = [[]] * 8
+    batch = _ordered_rows(pdfs)
+    ready, pend = _holdback_release(
+        _pend_unpack(*prior[3:]),
+        None if batch is None else batch[_ZS_COLS],
+        timed_out,
+    )
+    zs, zst = _zscore_step(ready, prior[:3])
+    out = pd.DataFrame(
+        {
+            "user_id": [int(key[0])] * len(ready),
+            "ts": ready["ts"].values,
+            "event_id": ready["event_id"].values,
+            "price": ready["price"].values,
+            "z": zs,
+        }
+    )
+    return out, (*zst, *_pend_pack(pend))
+
+
 def zscore_stream(ticks: DataFrame) -> DataFrame:
     """E3+E4 streaming twin: the per-tick taker-delta z-score computed
     LIVE with carried GroupState (trailing time-window buffer + delta
@@ -1259,61 +1357,13 @@ def zscore_stream(ticks: DataFrame) -> DataFrame:
     flushed by the event-time timeout once the watermark moves — so z
     is ALWAYS computed from a complete group delta, for arbitrary
     micro-batch cuts, matching the batch RANGE-frame definition."""
-
-    zs_cols = ["ts", "event_id", "price", "qty", "is_buy"]
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            win_ts, win_sq, ring, p_ts, p_eid, p_px, p_qty, p_buy = state.get
-            st = (list(win_ts), list(win_sq), list(ring))
-            pend = _pend_unpack(p_ts, p_eid, p_px, p_qty, p_buy)
-        else:
-            st = ([], [], [])
-            pend = _pend_unpack([], [], [], [], [])
-        chunks = (
-            []
-            if state.hasTimedOut
-            else [pdf[zs_cols] for pdf in pdfs if len(pdf)]
-        )
-        if chunks:
-            ready, pend = _tie_holdback(pend, pd.concat(chunks))
-        elif state.hasTimedOut:
-            # timeout (key quiet while the watermark advanced): under
-            # in-order per-key delivery the held tie group is complete
-            ready, pend = pend, pend.iloc[0:0]
-        else:
-            # non-timeout invocation that delivered no rows: the held
-            # group may still be mid-flight — keep it pending
-            ready = pend.iloc[0:0]
-        zs, st = _zscore_step(ready, st)
-        out = pd.DataFrame(
-            {
-                "user_id": [int(key[0])] * len(ready),
-                "ts": ready["ts"].values,
-                "event_id": ready["event_id"].values,
-                "price": ready["price"].values,
-                "z": zs,
-            }
-        )
-        state.update(
-            (list(st[0]), list(st[1]), list(st[2]), *_pend_pack(pend))
-        )
-        if len(pend):
-            # re-armed every invocation (Spark clears it otherwise):
-            # fire at the next watermark advance this key sits out
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-        yield out
-
-    return ticks.select(
-        "user_id", "ts", "event_id", "price", "qty", "is_buy"
-    ).groupBy("user_id").applyInPandasWithState(
-        fn,
+    return _keyed_fold(
+        ticks.select("user_id", *_ZS_COLS),
+        ["user_id"],
+        _zscore_stream_step,
         ZS_OUT_SCHEMA,
         ZS_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
+        deadline=_release_deadline(ZS_STATE_SCHEMA),
     )
 
 
@@ -1338,6 +1388,95 @@ LIVE_STATE_SCHEMA = T.StructType(
 )
 
 
+def _fsm_unpack(uid: int, carry) -> dict:
+    """Stored FSM carry ``(seq, qty, side, entry_ts_us, entry_price)``
+    (qty -1.0 = not yet sized, side "" = flat; None for a new key) →
+    the ``st`` dict ``_fsm_step`` mutates."""
+    if carry is None:
+        return {"uid": uid, "seq": 0, "qty": None, "pos": None}
+    seq, qty, side, ets_us, epx = carry
+    pos = (
+        None
+        if side == ""
+        else {
+            "side": side,
+            "entry_ts": pd.Timestamp(ets_us * 1000),
+            "entry_price": epx,
+        }
+    )
+    return {"uid": uid, "seq": seq, "qty": None if qty < 0 else qty, "pos": pos}
+
+
+def _fsm_pack(st: dict) -> tuple:
+    """``_fsm_unpack``'s inverse: the ``st`` dict → the stored carry."""
+    pos = st["pos"]
+    return (
+        int(st["seq"]),
+        -1.0 if st["qty"] is None else float(st["qty"]),
+        pos["side"] if pos else "",
+        int(pd.Timestamp(pos["entry_ts"]).value // 1000) if pos else 0,
+        float(pos["entry_price"]) if pos else 0.0,
+    )
+
+
+def _position_step(key, pdfs, prior, **fsm_params):
+    """Per-key ``position_fsm_stream`` transition over the
+    ``FSM_STATE_SCHEMA`` tuple."""
+    from zcode_iceberg_spark.operators.stateful import _fsm_step
+
+    st = _fsm_unpack(int(key[0]), prior)
+    rows = _ordered_rows(pdfs)
+    out = [] if rows is None else _fsm_step(rows, st, **fsm_params)
+    return out, _fsm_pack(st)
+
+
+_LIVE_COLS = [*_ZS_COLS, "entry_signal"]
+_LIVE_FSM_PARAMS = dict(
+    z_entry=1.5, tp_pct=0.01, sl_pct=0.01, max_hold_secs=86400.0,
+    margin=50.0, leverage=25.0,
+)
+
+
+def _live_step(key, pdfs, prior, timed_out=False, watermark_ms=-1):
+    """Per-key ``live_decisions_fsm_stream`` transition over the
+    ``LIVE_STATE_SCHEMA`` tuple: the same tie-group holdback as
+    ``zscore_stream`` — z AND the FSM walk only ever see complete
+    ts-groups (the FSM consumes z, so a partial-group z would
+    contaminate the decision sequence too) — then gated z → FSM."""
+    from zcode_iceberg_spark.operators.stateful import _fsm_step
+
+    if prior is None:
+        zst, carry, pend = ([], [], []), None, [[]] * 6
+    else:
+        zst, carry, pend = prior[:3], prior[3:8], prior[8:]
+    fst = _fsm_unpack(int(key[0]), carry)
+    batch = _ordered_rows(pdfs)
+    if batch is not None:
+        batch = batch[_LIVE_COLS].assign(
+            entry_signal=batch["entry_signal"].fillna(False)
+        )
+    ready, pend = _holdback_release(_pend_unpack(*pend), batch, timed_out)
+    rows: list[tuple] = []
+    if len(ready):
+        zs, zst = _zscore_step(ready, zst)
+        gate = ready["entry_signal"].to_numpy()
+        dec = pd.DataFrame(
+            {
+                "ts": ready["ts"].values,
+                "event_id": ready["event_id"].values,
+                "price": ready["price"].values,
+                "z": [z if g else 0.0 for z, g in zip(zs, gate)],
+            }
+        )
+        rows = _fsm_step(dec, fst, **_LIVE_FSM_PARAMS)
+    new_state = (
+        *[list(a) for a in zst],
+        *_fsm_pack(fst),
+        *_pend_pack(pend, with_sig=True),
+    )
+    return rows, new_state
+
+
 def live_decisions_fsm_stream(gated_ticks: DataFrame) -> DataFrame:
     """The composed live tick path as ONE stateful operator: per key
     and micro-batch, the z-score kernel (`_zscore_step`) runs first,
@@ -1351,111 +1490,15 @@ def live_decisions_fsm_stream(gated_ticks: DataFrame) -> DataFrame:
     is also the scale-correct plan: both stages key on user_id, so a
     chain would re-shuffle the tick stream between them for nothing.
     """
-    from zcode_iceberg_spark.operators.stateful import (
-        LEDGER_SCHEMA,
-        _fsm_step,
-    )
+    from zcode_iceberg_spark.operators.stateful import LEDGER_SCHEMA
 
-    cols = [f.name for f in LEDGER_SCHEMA.fields]
-
-    live_cols = ["ts", "event_id", "price", "qty", "is_buy", "entry_signal"]
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        uid = int(key[0])
-        if state.exists:
-            (
-                win_ts, win_sq, ring, seq, qty, side, ets_us, epx,
-                p_ts, p_eid, p_px, p_qty, p_buy, p_sig,
-            ) = state.get
-            zst = (list(win_ts), list(win_sq), list(ring))
-            pend = _pend_unpack(p_ts, p_eid, p_px, p_qty, p_buy, p_sig)
-            pos = (
-                None
-                if side == ""
-                else {
-                    "side": side,
-                    "entry_ts": pd.Timestamp(ets_us * 1000),
-                    "entry_price": epx,
-                }
-            )
-            fst = {"uid": uid, "seq": seq, "qty": None if qty < 0 else qty,
-                   "pos": pos}
-        else:
-            zst = ([], [], [])
-            pend = _pend_unpack([], [], [], [], [], [])
-            fst = {"uid": uid, "seq": 0, "qty": None, "pos": None}
-        rows: list[tuple] = []
-        if state.hasTimedOut:
-            chunks = []
-        else:
-            chunks = []
-            for pdf in pdfs:
-                if len(pdf):
-                    c = pdf[live_cols].copy()
-                    c["entry_signal"] = c["entry_signal"].fillna(False)
-                    chunks.append(c)
-        if chunks:
-            # same tie-group holdback as zscore_stream: z AND the FSM
-            # walk must only ever see complete ts-groups (the FSM
-            # consumes z, so a partial-group z would contaminate the
-            # decision sequence too)
-            ready, pend = _tie_holdback(pend, pd.concat(chunks))
-        elif state.hasTimedOut:
-            ready, pend = pend, pend.iloc[0:0]
-        else:
-            ready = pend.iloc[0:0]
-        if len(ready):
-            zs, zst = _zscore_step(ready, zst)
-            gate = ready["entry_signal"].to_numpy()
-            dec = pd.DataFrame(
-                {
-                    "ts": ready["ts"].values,
-                    "event_id": ready["event_id"].values,
-                    "price": ready["price"].values,
-                    "z": [z if g else 0.0 for z, g in zip(zs, gate)],
-                }
-            )
-            rows.extend(
-                _fsm_step(
-                    dec,
-                    fst,
-                    z_entry=1.5,
-                    tp_pct=0.01,
-                    sl_pct=0.01,
-                    max_hold_secs=86400.0,
-                    margin=50.0,
-                    leverage=25.0,
-                )
-            )
-        # state write + timeout re-arm BEFORE the yield (same order as
-        # zscore_stream): correctness must not depend on the engine
-        # draining the generator past the output batch
-        pos = fst["pos"]
-        state.update(
-            (
-                list(zst[0]),
-                list(zst[1]),
-                list(zst[2]),
-                int(fst["seq"]),
-                -1.0 if fst["qty"] is None else float(fst["qty"]),
-                pos["side"] if pos else "",
-                int(pd.Timestamp(pos["entry_ts"]).value // 1000) if pos else 0,
-                float(pos["entry_price"]) if pos else 0.0,
-                *_pend_pack(pend, with_sig=True),
-            )
-        )
-        if len(pend):
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-        yield pd.DataFrame(rows, columns=cols)
-
-    return gated_ticks.groupBy("user_id").applyInPandasWithState(
-        fn,
+    return _keyed_fold(
+        gated_ticks,
+        ["user_id"],
+        _live_step,
         LEDGER_SCHEMA,
         LIVE_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
+        deadline=_release_deadline(LIVE_STATE_SCHEMA),
     )
 
 
@@ -1573,60 +1616,14 @@ def position_fsm_stream(
 
     Input: streaming (user_id, ts, event_id, price, z). Output:
     ledger rows appended as trades close."""
-    from zcode_iceberg_spark.operators.stateful import LEDGER_SCHEMA, _fsm_step
+    from zcode_iceberg_spark.operators.stateful import LEDGER_SCHEMA
 
-    params = dict(
-        z_entry=z_entry, tp_pct=tp_pct, sl_pct=sl_pct,
+    step = partial(
+        _position_step, z_entry=z_entry, tp_pct=tp_pct, sl_pct=sl_pct,
         max_hold_secs=max_hold_secs, margin=margin, leverage=leverage,
     )
-    cols = [f.name for f in LEDGER_SCHEMA.fields]
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        uid = int(key[0])
-        if state.exists:
-            seq, qty, side, ets_us, epx = state.get
-            pos = (
-                None
-                if side == ""
-                else {
-                    "side": side,
-                    "entry_ts": pd.Timestamp(ets_us * 1000),
-                    "entry_price": epx,
-                }
-            )
-            st = {"uid": uid, "seq": seq, "qty": None if qty < 0 else qty,
-                  "pos": pos}
-        else:
-            st = {"uid": uid, "seq": 0, "qty": None, "pos": None}
-        rows: list[tuple] = []
-        # concat BEFORE sorting (chunk boundaries don't respect event
-        # order; see iceberg_refill_step)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks).sort_values(
-                ["ts", "event_id"], kind="mergesort"
-            )
-            rows.extend(_fsm_step(pdf, st, **params))
-        yield pd.DataFrame(rows, columns=cols)
-        pos = st["pos"]
-        state.update(
-            (
-                int(st["seq"]),
-                -1.0 if st["qty"] is None else float(st["qty"]),
-                pos["side"] if pos else "",
-                int(pd.Timestamp(pos["entry_ts"]).value // 1000) if pos else 0,
-                float(pos["entry_price"]) if pos else 0.0,
-            )
-        )
-
-    return decisions.groupBy("user_id").applyInPandasWithState(
-        fn,
-        LEDGER_SCHEMA,
-        FSM_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        decisions, ["user_id"], step, LEDGER_SCHEMA, FSM_STATE_SCHEMA
     )
 
 
@@ -1738,17 +1735,10 @@ def funnel_step(
     that is the same at-arrival semantics the reference's live feed
     has, and the monotone stages bound the divergence to the one late
     transition."""
-    import pandas as pd
-
     t1, t2, t3, n = state_tuple if state_tuple is not None else (-1, -1, -1, 0)
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        # concat BEFORE sorting (rows span Arrow chunks; see
-        # hysteresis_stream)
-        allrows = pd.concat(chunks).sort_values(
-            ["ts_us", "event_id"], kind="mergesort"
-        )
-        for typ, us in zip(allrows["event_type"], allrows["ts_us"]):
+    rows = _ordered_rows(pdfs, ["ts_us", "event_id"])
+    if rows is not None:
+        for typ, us in zip(rows["event_type"], rows["ts_us"]):
             us = int(us)
             n += 1
             if typ == stages[0]:
@@ -1779,8 +1769,6 @@ def funnel_stream(events: DataFrame) -> DataFrame:
     conversion dashboard view. State is 4 longs per user, O(users)
     regardless of stream length (a production feed would expire
     long-idle users via a timeout)."""
-    import pandas as pd
-
     # single source of truth for stages and window: the batch query
     from zcode_iceberg_spark.suite.flow import FUNNEL_STAGES, FUNNEL_WINDOW_HOURS
 
@@ -1791,25 +1779,14 @@ def funnel_stream(events: DataFrame) -> DataFrame:
         "user_id",
         "event_id",
         "event_type",
-        F.unix_micros(F.col("ts").cast("timestamp_ntz").cast("timestamp")).alias(
-            "ts_us"
-        ),
+        ts_micros().alias("ts_us"),
     )
-
-    def fn(key, pdfs, state):
-        row, new_state = funnel_step(
-            key, pdfs, state.get if state.exists else None,
-            stages=stages, window_us=window_us,
-        )
-        state.update(new_state)
-        yield pd.DataFrame([row])
-
-    return ev.groupBy("user_id").applyInPandasWithState(
-        fn,
+    return _keyed_fold(
+        ev,
+        ["user_id"],
+        partial(funnel_step, stages=stages, window_us=window_us),
         FUNNEL_OUT_SCHEMA,
         FUNNEL_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
     )
 
 
@@ -1840,16 +1817,11 @@ def transitions_step(
     delivery (the agreement tests' replay contract); cross-batch late
     arrivals inside the watermark pair up in arrival order instead
     (the reference's own live-feed semantics)."""
-    import pandas as pd
-
     last = state_tuple[0] if state_tuple is not None else ""
     out: list[dict] = []
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        allrows = pd.concat(chunks).sort_values(
-            ["ts_us", "event_id"], kind="mergesort"
-        )
-        for typ, eid in zip(allrows["event_type"], allrows["event_id"]):
+    rows = _ordered_rows(pdfs, ["ts_us", "event_id"])
+    if rows is not None:
+        for typ, eid in zip(rows["event_type"], rows["event_id"]):
             if last:
                 out.append(
                     {
@@ -1870,31 +1842,14 @@ def transitions_stream(events: DataFrame) -> DataFrame:
     live matrix is a downstream aggregation of the pair stream. The
     expensive part (the per-user ordering) stays exactly as cheap as
     the batch `lead` window."""
-    import pandas as pd
-
     ev = events.select(
         "user_id",
         "event_id",
         "event_type",
-        F.unix_micros(F.col("ts").cast("timestamp_ntz").cast("timestamp")).alias(
-            "ts_us"
-        ),
+        ts_micros().alias("ts_us"),
     )
-
-    def fn(key, pdfs, state):
-        rows, new_state = transitions_step(
-            key, pdfs, state.get if state.exists else None
-        )
-        state.update(new_state)
-        if rows:
-            yield pd.DataFrame(rows)
-
-    return ev.groupBy("user_id").applyInPandasWithState(
-        fn,
-        TRANS_OUT_SCHEMA,
-        TRANS_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        ev, ["user_id"], transitions_step, TRANS_OUT_SCHEMA, TRANS_STATE_SCHEMA
     )
 
 
@@ -1917,6 +1872,25 @@ STALE_OUT_SCHEMA = T.StructType(
 )
 
 
+def _staleness_step(key, pdfs, prior, timed_out=False, watermark_ms=-1):
+    """Per-key ``staleness_stream`` transition over the
+    ``STALE_STATE_SCHEMA`` tuple: a timeout emits the `stale` alert and
+    returns no state (the key is re-keyed by its next event); data
+    refreshes (newest event time, count) and emits a `live` row. Both
+    are commutative aggregates, so arrival order does not matter."""
+    if timed_out:
+        last_us, n = prior
+        return {"user_id": key[0], "kind": "stale", "last_us": last_us,
+                "n_events": n}, None
+    last_us, n = prior if prior is not None else (-1, 0)
+    for pdf in pdfs:
+        if len(pdf):
+            n += len(pdf)
+            last_us = max(last_us, int(pdf["ts_us"].max()))
+    return {"user_id": key[0], "kind": "live", "last_us": last_us,
+            "n_events": n}, (last_us, n)
+
+
 def staleness_stream(events: DataFrame, max_silence_sec: int = 300) -> DataFrame:
     """Stream-health watchdog on EVENT-TIME TIMERS (H9 made a real
     operator): every key carries (last event time, count) in
@@ -1930,58 +1904,21 @@ def staleness_stream(events: DataFrame, max_silence_sec: int = 300) -> DataFrame
     This is the one operator family that needs timers, not just
     carried state: output is DRIVEN BY ABSENCE of input. State is two
     longs per key; a fired timeout clears it (re-keyed on the next
-    event), so state is O(currently-live keys)."""
-    import pandas as pd
-
+    event), so state is O(currently-live keys). A late straggler whose
+    deadline already trails the watermark is clamped by ``_keyed_fold`` to
+    fire at the next watermark advance — immediately stale, the right
+    semantics for it."""
     # keep the watermarked `ts` attribute in the projection — event-time
     # timeout requires the watermark column to survive to the stateful
     # operator (the fold itself reads only ts_us)
-    ev = events.select(
-        "user_id",
-        "ts",
-        F.unix_micros(F.col("ts").cast("timestamp_ntz").cast("timestamp")).alias(
-            "ts_us"
-        ),
-    )
-
-    def fn(key, pdfs, state):
-        if state.hasTimedOut:
-            last_us, n = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [{"user_id": key[0], "kind": "stale", "last_us": last_us,
-                  "n_events": n}]
-            )
-            return
-        last_us, n = state.get if state.exists else (-1, 0)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            allrows = pd.concat(chunks)
-            n += len(allrows)
-            last_us = max(last_us, int(allrows["ts_us"].max()))
-        state.update((last_us, n))
-        # arm the event-time deadline: watermark passing this with no
-        # newer data for the key fires hasTimedOut above. A key whose
-        # newest event already trails the watermark by more than the
-        # silence budget would compute a deadline in the past — Spark
-        # rejects that, so clamp to just past the current watermark
-        # (the key is then immediately stale on the next batch, which
-        # is the right semantics for a late straggler).
-        deadline_ms = last_us // 1000 + max_silence_sec * 1000
-        state.setTimeoutTimestamp(
-            max(deadline_ms, state.getCurrentWatermarkMs() + 1)
-        )
-        yield pd.DataFrame(
-            [{"user_id": key[0], "kind": "live", "last_us": last_us,
-              "n_events": n}]
-        )
-
-    return ev.groupBy("user_id").applyInPandasWithState(
-        fn,
+    ev = events.select("user_id", "ts", ts_micros().alias("ts_us"))
+    return _keyed_fold(
+        ev,
+        ["user_id"],
+        _staleness_step,
         STALE_OUT_SCHEMA,
         STALE_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
+        deadline=lambda st: st[0] // 1000 + max_silence_sec * 1000,
     )
 
 
@@ -2036,8 +1973,6 @@ def gap_fill_step(
 
     A late event into an already-finalized bucket is dropped (the
     at-arrival semantics of the other stateful twins)."""
-    import pandas as pd
-
     if state_tuple is not None:
         pb, pc, pv, pn, last_close, thru = state_tuple
     else:
@@ -2073,14 +2008,9 @@ def gap_fill_step(
                 thru = b
         return out, (pb, pc, pv, pn, last_close, thru)
 
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        allrows = pd.concat(chunks).sort_values(
-            ["ts_us", "event_id"], kind="mergesort"
-        )
-        for us, price, qty in zip(
-            allrows["ts_us"], allrows["price"], allrows["qty"]
-        ):
+    rows = _ordered_rows(pdfs, ["ts_us", "event_id"])
+    if rows is not None:
+        for us, price, qty in zip(rows["ts_us"], rows["price"], rows["qty"]):
             b = int(us) // bucket_us
             if pb == -1:
                 if thru == -1:
@@ -2117,55 +2047,26 @@ def gap_fill_stream(
     a silent key keeps heart-beating gap bars as the watermark (driven
     by the rest of the stream) advances — the continuous-aggregate
     liveness a chart consumer needs."""
-    import pandas as pd
-
     ev = ticks.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "price",
-        "qty",
-        F.unix_micros(F.col("ts").cast("timestamp_ntz").cast("timestamp")).alias(
-            "ts_us"
-        ),
+        "user_id", "ts", "event_id", "price", "qty", ts_micros().alias("ts_us")
     )
 
-    def fn(key, pdfs, state):
-        if state.hasTimedOut:
-            rows, new_state = gap_fill_step(
-                key,
-                [],
-                state.get,
-                bucket_us=bucket_us,
-                timed_out=True,
-                watermark_ms=state.getCurrentWatermarkMs(),
-            )
-            state.update(new_state)
-        else:
-            rows, new_state = gap_fill_step(
-                key, pdfs, state.get if state.exists else None, bucket_us=bucket_us
-            )
-            state.update(new_state)
-        # deadline: the pending bucket's end while one is open, else
-        # the end of the NEXT whole bucket (so an idle key's timer
-        # fires exactly once per elapsed heartbeat bucket, not on
-        # every micro-batch)
-        pb, _, _, _, _, thru = new_state
-        ref = max(pb, thru + 1)
-        if ref >= 0 and (pb >= 0 or thru >= 0):
-            deadline_ms = ((ref + 1) * bucket_us) // 1000
-            state.setTimeoutTimestamp(
-                max(deadline_ms, state.getCurrentWatermarkMs() + 1)
-            )
-        if rows:
-            yield pd.DataFrame(rows)
+    def deadline(st):
+        # the pending bucket's end while one is open, else the end of
+        # the NEXT whole bucket (so an idle key's timer fires exactly
+        # once per elapsed heartbeat bucket, not on every micro-batch)
+        pb, thru = st[0], st[5]
+        if pb < 0 and thru < 0:
+            return None
+        return ((max(pb, thru + 1) + 1) * bucket_us) // 1000
 
-    return ev.groupBy("user_id").applyInPandasWithState(
-        fn,
+    return _keyed_fold(
+        ev,
+        ["user_id"],
+        partial(gap_fill_step, bucket_us=bucket_us),
         GAPFILL_OUT_SCHEMA,
         GAPFILL_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
+        deadline=deadline,
     )
 
 
@@ -2204,8 +2105,6 @@ def cusum_step(
     closed form S⁺ = U − min U needs — and emits one scored row per
     standardized return, identical to the batch `q_cusum_alarm`
     windows under event-time-ordered delivery."""
-    import pandas as pd
-
     if k is None or h is None:
         # single source of truth for the thresholds: the batch query
         from zcode_iceberg_spark.suite.flow import CUSUM_H, CUSUM_K
@@ -2218,12 +2117,9 @@ def cusum_step(
         # Page's anchor: the extrema include U_0 = 0
         u_up, u_up_min, u_dn, u_dn_max = 0.0, 0.0, 0.0, 0.0
     out: list[dict] = []
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        allrows = pd.concat(chunks).sort_values(
-            ["ts_us", "event_id"], kind="mergesort"
-        )
-        for x, eid in zip(allrows["x"], allrows["event_id"]):
+    rows = _ordered_rows(pdfs, ["ts_us", "event_id"])
+    if rows is not None:
+        for x, eid in zip(rows["x"], rows["event_id"]):
             u_up += float(x) - k
             u_dn += float(x) + k
             u_up_min = min(u_up_min, u_up)
@@ -2250,30 +2146,11 @@ def cusum_stream(
     standardized-return stream (user_id, ts, event_id, x) — in
     production σ comes from the warmup batch exactly like the
     trained-model weights seam (H10); state is four floats per key."""
-    import pandas as pd
-
-    ev = xs.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "x",
-        F.unix_micros(F.col("ts").cast("timestamp_ntz").cast("timestamp")).alias(
-            "ts_us"
-        ),
-    )
-
-    def fn(key, pdfs, state):
-        rows, new_state = cusum_step(
-            key, pdfs, state.get if state.exists else None, k=k, h=h
-        )
-        state.update(new_state)
-        if rows:
-            yield pd.DataFrame(rows)
-
-    return ev.groupBy("user_id").applyInPandasWithState(
-        fn,
+    ev = xs.select("user_id", "ts", "event_id", "x", ts_micros().alias("ts_us"))
+    return _keyed_fold(
+        ev,
+        ["user_id"],
+        partial(cusum_step, k=k, h=h),
         CUSUM_OUT_SCHEMA,
         CUSUM_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
     )

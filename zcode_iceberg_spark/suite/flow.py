@@ -6,7 +6,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from zcode_iceberg_spark.operators import flow as ops
-from zcode_iceberg_spark.sources.tables import EVENTS_TICKS_SQL, events_ticks
+from zcode_iceberg_spark.sources.tables import (
+    EVENTS_TICKS_SQL,
+    events_ticks,
+    ts_micros,
+)
 from zcode_iceberg_spark.suite import Query
 
 TICKS_CTE = f"WITH ticks AS ({EVENTS_TICKS_SQL})"
@@ -603,7 +607,7 @@ def q_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = events_ticks(spark, sf_dir).select(
         "user_id", "ts", "event_id", F.col("event_type").alias("attr")
     )
-    us = F.unix_micros(F.col("ts").cast("timestamp_ntz").cast("timestamp"))
+    us = ts_micros()
     rng = t.agg(
         F.min(us).alias("mnt"), F.max(us).alias("mxt")
     ).select(
@@ -1173,7 +1177,7 @@ def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
-    us = F.unix_micros(F.col("ts").cast("timestamp_ntz").cast("timestamp"))
+    us = ts_micros()
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     new_s = F.when(
         (us - F.lag(us).over(w)).isNull() | ((us - F.lag(us).over(w)) > gap_us),
@@ -1298,9 +1302,7 @@ def _zgrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
-        F.unix_micros(
-            F.col("ts").cast("timestamp_ntz").cast("timestamp")
-        ).alias("tus"),
+        ts_micros().alias("tus"),
     )
     stats = ev.agg(
         F.min("tus").alias("mnt"),
