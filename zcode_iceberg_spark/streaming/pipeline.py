@@ -379,11 +379,10 @@ def _hysteresis_step(key, pdfs, prior, confirm_k: int = 2):
     return out, (confirmed, pending or "", count)
 
 
-def hysteresis_stream(
-    labeled: DataFrame, confirm_k: int = 2, z_up: float = 1.0, z_dn: float = -1.0
-) -> DataFrame:
+def hysteresis_stream(labeled: DataFrame, confirm_k: int = 2) -> DataFrame:
     """G16/H5 streaming twin: k-confirmation trend flips with carried
-    GroupState. Input: ticks with a ``raw_label`` column."""
+    GroupState. Input: ticks with a ``raw_label`` column (the
+    thresholds are applied upstream, where the labels are made)."""
     return _keyed_fold(
         labeled,
         ["user_id"],
@@ -1481,10 +1480,12 @@ def live_decisions_fsm_stream(gated_ticks: DataFrame) -> DataFrame:
     """The composed live tick path as ONE stateful operator: per key
     and micro-batch, the z-score kernel (`_zscore_step`) runs first,
     the signal-score entry gate masks z (the ``entry_signal`` column,
-    broadcast-joined upstream from the warmup score table), and the
-    SAME ``_fsm_step`` kernel the batch fold uses walks the decisions
-    — feature battery → gate → FSM in one GroupState row, one
-    shuffle. Emits closed-trade ledger rows as they happen.
+    broadcast-joined upstream by ``live_tick_pipeline`` from the warmup
+    score table, evaluated once at definition — a ``LocalTableScan``
+    in every batch), and the SAME ``_fsm_step`` kernel the batch fold
+    uses walks the decisions — feature battery → gate → FSM in one
+    GroupState row, one shuffle. Emits closed-trade ledger rows as
+    they happen.
 
     Fusing (rather than chaining two applyInPandasWithState stages)
     is also the scale-correct plan: both stages key on user_id, so a
@@ -1514,9 +1515,11 @@ def live_tick_pipeline(
     streaming job (main.py:122-142 → strategy.py:334-443): normalized
     tick stream → stateful per-tick feature battery (trailing delta
     z) → warmup-frozen signal-score entry gate (q_signal_scores over
-    the warmup corpus, broadcast into the stream — the reference
-    computes its score state from warmup-backfilled history the same
-    way it trains its models there) → position FSM with carried
+    the warmup corpus, evaluated once when the pipeline is defined and
+    broadcast into the stream as a ``LocalTableScan`` in every batch,
+    supervisor restarts included — the reference computes its score
+    state from warmup-backfilled history the same way it trains its
+    models there) → position FSM with carried
     GroupState → ledger sink (day-partitioned append, A6/A7) +
     daily-summary upsert (A8), one writeStream under the H7
     processing-time trigger. Returns (start_fn, ledger_dir,
@@ -1541,36 +1544,37 @@ def live_tick_pipeline(
     ledger_dir = f"{out_dir}/ledger"
     summary_dir = f"{out_dir}/daily_summary"
     checkpoint = f"{out_dir}/checkpoint"
-    # warmup phase: the per-key score table (k rows) — frozen and
-    # broadcast, exactly like the trained model blobs
+    # warmup phase: the per-key score table (k rows) — evaluated once,
+    # here, and broadcast, exactly like the trained model blobs. A lazy
+    # plan would re-run q_signal_scores in every micro-batch; an Arrow
+    # table below spark.sql.execution.arrow.localRelationThreshold
+    # becomes a LocalRelation (a list of Rows would become a LogicalRDD)
     gates = live_entry_gates(spark, sf_dir)
-    ticks = source(spark, src_dir)
-    gated = ticks.join(F.broadcast(gates), "user_id").select(
+    gates = spark.createDataFrame(gates.toArrow(), gates.schema)
+    gated = source(spark, src_dir).join(F.broadcast(gates), "user_id").select(
         "user_id", "ts", "event_id", "price", "qty", "is_buy", "entry_signal"
     )
     ledger = live_decisions_fsm_stream(gated)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        b = batch_df.persist()
+        b = batch_df.withColumn(
+            "day", F.date_format("exit_ts", "yyyy-MM-dd")
+        ).persist()
         try:
-            if b.count() == 0:
+            # the days this batch touched; none means an empty batch
+            days = [r["day"] for r in b.select("day").distinct().collect()]
+            if not days:
                 return
             # epoch-keyed overwrite, day-partitioned inside: foreachBatch
             # is at-least-once, so a crash-replayed epoch REWRITES its own
             # batch_id partition instead of double-appending trades (the
             # route_quarantine/passage-ledger sink rule); day stays a
             # partition column so readers still prune by day
-            (
-                b.withColumn("day", F.date_format("exit_ts", "yyyy-MM-dd"))
-                .write.mode("overwrite")
-                .partitionBy("day")
-                .parquet(f"{ledger_dir}/batch_id={epoch_id}")
+            b.write.mode("overwrite").partitionBy("day").parquet(
+                f"{ledger_dir}/batch_id={epoch_id}"
             )
             # cumulative per-day rollup over everything landed so far,
             # upserted into ONLY the days this batch touched (A8)
-            days = [r["day"] for r in b.select(
-                F.date_format("exit_ts", "yyyy-MM-dd").alias("day")
-            ).distinct().collect()]
             led = b.sparkSession.read.parquet(ledger_dir).filter(
                 F.col("day").isin(days)
             )

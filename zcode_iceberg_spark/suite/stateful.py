@@ -343,6 +343,27 @@ dec AS (
 )"""
 
 
+def _live_gated_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The live-pipeline twins' FSM input: (user_id, ts, event_id,
+    price, z) decisions with z masked to 0 where the key's warmup
+    entry gate (``live_entry_gates``) is closed."""
+    from zcode_iceberg_spark.suite.scoring import live_entry_gates
+
+    gates = live_entry_gates(spark, sf_dir)
+    d = _decisions(spark, sf_dir).select(
+        "user_id", "ts", "event_id", "price", "z"
+    )
+    return d.join(F.broadcast(gates), "user_id").select(
+        "user_id",
+        "ts",
+        "event_id",
+        "price",
+        F.when(F.col("entry_signal"), F.col("z"))
+        .otherwise(F.lit(0.0))
+        .alias("z"),
+    )
+
+
 def q_live_pipeline_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE reference product composed end-to-end in one plan (VERDICT
     r8 #2; main.py:122-142 → strategy.py:334-443): ticks → per-tick
@@ -356,22 +377,7 @@ def q_live_pipeline_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream ≡ batch on every closed trade. Oracle = the composed
     recursive-CTE chain (features + gate + z walk), the composition
     q_wp_calibration already proved writable."""
-    from zcode_iceberg_spark.suite.scoring import live_entry_gates
-
-    gates = live_entry_gates(spark, sf_dir)
-    d = _decisions(spark, sf_dir).select(
-        "user_id", "ts", "event_id", "price", "z"
-    )
-    d = d.join(F.broadcast(gates), "user_id").select(
-        "user_id",
-        "ts",
-        "event_id",
-        "price",
-        F.when(F.col("entry_signal"), F.col("z"))
-        .otherwise(F.lit(0.0))
-        .alias("z"),
-    )
-    led = st.position_fsm(d)
+    led = st.position_fsm(_live_gated_decisions(spark, sf_dir))
     return led.select(
         "user_id",
         "trade_seq",
@@ -399,22 +405,9 @@ def q_live_pipeline_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger — exactly what live_tick_pipeline's daily-summary sink
     upserts per day (richer columns here; the sink keeps the hot
     subset). Oracle = the same rollup over the gated recursive walk."""
-    from zcode_iceberg_spark.suite.scoring import live_entry_gates
-
-    gates = live_entry_gates(spark, sf_dir)
-    d = _decisions(spark, sf_dir).select(
-        "user_id", "ts", "event_id", "price", "z"
+    return st.ledger_daily_summary(
+        st.position_fsm(_live_gated_decisions(spark, sf_dir))
     )
-    d = d.join(F.broadcast(gates), "user_id").select(
-        "user_id",
-        "ts",
-        "event_id",
-        "price",
-        F.when(F.col("entry_signal"), F.col("z"))
-        .otherwise(F.lit(0.0))
-        .alias("z"),
-    )
-    return st.ledger_daily_summary(st.position_fsm(d))
 
 
 def _live_summary_sql() -> str:
