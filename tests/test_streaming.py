@@ -784,8 +784,8 @@ def test_iceberg_refill_stream_matches_batch(spark, sf_dir):
 
 def _chunk_order_case(name):
     """(step, key, one event-ordered frame) for every step that orders
-    its rows through ``_ordered_rows``. Timestamps tie in pairs so the
-    event_id tie-break is exercised too."""
+    its rows through ``_ordered_rows`` or ``_tie_holdback``. Timestamps
+    tie in pairs so the event_id tie-break is exercised too."""
     from functools import partial
 
     import pandas as pd
@@ -830,15 +830,32 @@ def _chunk_order_case(name):
             {"raw_label": ["UP", "UP", "DOWN", "DOWN", "UP", "UP"]},
         ),
         "position": (
-            partial(
-                pl._position_step, z_entry=1.5, tp_pct=0.01, sl_pct=0.01,
-                max_hold_secs=86400.0, margin=50.0, leverage=25.0,
-            ),
-            (7,),
+            pl._position_step, (7,),
             {"price": [100.0, 100.0, 100.5, 102.0, 99.0, 100.0],
              "z": [0.0, 2.0, 0.0, 0.0, -2.0, 0.0]},
         ),
+        "zscore": (
+            pl._zscore_stream_step, (7,),
+            {"price": [10.0, 11.0, 12.0, 9.0, 9.5, 13.0],
+             "qty": [1.0, 2.0, 3.0, 4.0, 5.0, 6.0],
+             "is_buy": [True, False, True, True, False, True]},
+        ),
     }
+    if name == "live":
+        # past the z kernel's 30-row population: a buy burst at rows
+        # 36-37 opens LONG, the +2% price at row 40 takes profit
+        n = 48
+        return pl._live_step, (7,), pd.DataFrame(
+            {
+                "user_id": 7,
+                "ts": pd.to_datetime([i // 2 * 10 for i in range(n)], unit="s"),
+                "event_id": range(1, n + 1),
+                "price": [100.0] * 40 + [102.0] * 8,
+                "qty": [50.0 if i in (36, 37) else 1.0 + i % 3 for i in range(n)],
+                "is_buy": [i % 2 == 0 or i in (36, 37) for i in range(n)],
+                "entry_signal": True,
+            }
+        )
     step, key, extra = cols[name]
     return step, key, base.assign(**extra)
 
@@ -846,7 +863,7 @@ def _chunk_order_case(name):
 @pytest.mark.parametrize(
     "name",
     ["iceberg_refill", "funnel", "transitions", "cusum", "gap_fill",
-     "hysteresis", "position"],
+     "hysteresis", "position", "zscore", "live"],
 )
 def test_step_chunk_order_invariance(name):
     """Every ordered step must concat a key's Arrow chunks BEFORE
@@ -869,6 +886,45 @@ def test_step_chunk_order_invariance(name):
     assert run([rows.iloc[3:], rows.iloc[:3]]) == want
     # interleaved: odd rows then even rows
     assert run([rows.iloc[1::2], rows.iloc[0::2]]) == want
+
+
+_PEND = [
+    ("pend_ts_us", "array<bigint>"), ("pend_eid", "array<bigint>"),
+    ("pend_price", "array<double>"), ("pend_qty", "array<double>"),
+    ("pend_buy", "array<boolean>"),
+]
+_ZWIN = [
+    ("win_ts", "array<bigint>"), ("win_sq", "array<double>"),
+    ("ring", "array<double>"),
+]
+_FSM = [
+    ("seq", "int"), ("qty", "double"), ("side", "string"),
+    ("entry_ts_us", "bigint"), ("entry_price", "double"),
+]
+
+
+_STATE_LAYOUTS = {
+    "HYST_STATE_SCHEMA":
+        [("confirmed", "string"), ("pending", "string"), ("count", "int")],
+    "FSM_STATE_SCHEMA": _FSM,
+    "ZS_STATE_SCHEMA": _ZWIN + _PEND,
+    "LIVE_STATE_SCHEMA": _ZWIN + _FSM + _PEND + [("pend_sig", "array<boolean>")],
+}
+
+
+@pytest.mark.parametrize("schema", list(_STATE_LAYOUTS))
+def test_state_schema_layout_is_pinned(schema):
+    """The state store persists a key's state tuple in its schema's
+    field order, so a checkpoint only resumes under the same names and
+    types in the same order. The step conformity checks compare tuples
+    against whatever the schema is, so they would stay green under a
+    reordered composition; this pins the persisted layout itself."""
+    from zcode_iceberg_spark.streaming import pipeline as pl
+
+    fields = getattr(pl, schema).fields
+    want = _STATE_LAYOUTS[schema]
+    assert [(f.name, f.dataType.simpleString()) for f in fields] == want
+    assert all(f.nullable for f in fields)
 
 
 class _FoldCapture:

@@ -12,19 +12,29 @@ order-sensitive and stateful — irreducible to window/agg expressions
   per key; flat → open on entry signal → exit on TP/SL/time-stop;
   deterministic fills at the triggering row's price; ledger rows out.
 
-Execution model: ``applyInPandas`` per key — each key's history is
-processed as one ordered pandas group (Arrow-batched, vectorized I/O,
-sequential core — the loop IS the semantics). Spark distributes
-across keys: at 100 TB with millions of keys this parallelizes
-perfectly; the per-key group must fit in executor memory, which holds
-because decision rows per key are bounded (the same assumption the
-reference's deques make). In streaming mode the same folds run under
-``applyInPandasWithState`` (streaming/ module) with the carried state
-being (pending_label, confirm_count) / the open-position row —
-identical transition functions, shared here.
+One step, two drivers. Each operator is ONE pure per-key transition
+``step(key, pdfs, prior) -> (rows, new_state)`` (``_hysteresis_step``,
+``_position_step``), and the batch and streaming modes differ only in
+the driver that runs it:
+
+- batch: ``_keyed_batch`` — ``applyInPandas`` per key, one call over
+  the key's whole history with ``prior=None`` (Arrow-batched,
+  vectorized I/O, sequential core — the loop IS the semantics). Spark
+  distributes across keys: at 100 TB with millions of keys this
+  parallelizes perfectly; the per-key group must fit in executor
+  memory, which holds because decision rows per key are bounded (the
+  same assumption the reference's deques make). A step with an
+  end-of-data action takes a ``final`` flag, which only batch callers
+  set (the FSM's EOD close);
+- streaming: ``streaming/pipeline.py:_keyed_fold`` —
+  ``applyInPandasWithState``, one call per key and micro-batch, with
+  the carried state being (confirmed, pending, count) / the
+  ``FSM_STATE_SCHEMA`` row.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 import pandas as pd
 
@@ -50,9 +60,9 @@ def _hysteresis_fold(
     pending: str | None = None,
     count: int = 0,
 ) -> tuple[list[str], list[int], tuple[str, str | None, int]]:
-    """Sequential hysteresis transition — THE shared kernel for batch
-    (applyInPandas) and streaming (applyInPandasWithState). Takes the
-    carried state and returns per-row outputs plus the final state.
+    """Sequential hysteresis transition — the kernel of
+    ``_hysteresis_step``. Takes the carried state and returns per-row
+    outputs plus the final state.
 
     r13 vectorization (guide §4.2): the row loop is now a loop over
     RUNS of identical raw labels (maximal streaks), because the
@@ -109,33 +119,31 @@ def _hysteresis_fold(
     )
 
 
-def hysteresis(
-    df: DataFrame,
-    label_col: str,
-    confirm_k: int = 2,
-    key: str = "user_id",
-    order: tuple[str, str] = ("ts", "event_id"),
-) -> DataFrame:
-    """G16: per-key label stream with k-confirmation flips.
+def _concat_rows(pdfs) -> pd.DataFrame | None:
+    """A key's rows from every Arrow chunk of one call, in arrival
+    order, or None when the call delivered no rows."""
+    chunks = [pdf for pdf in pdfs if len(pdf)]
+    if not chunks:
+        return None
+    return chunks[0] if len(chunks) == 1 else pd.concat(chunks)
 
-    Input needs (key, *order, label_col); output one row per input row
-    with the confirmed label and pending counter.
-    """
 
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(list(order), kind="mergesort")
-        lab, cnt, _ = _hysteresis_fold(pdf[label_col], confirm_k)
-        return pd.DataFrame(
-            {
-                "user_id": pdf[key].values,
-                "event_id": pdf[order[1]].values,
-                "raw_label": pdf[label_col].values,
-                "confirmed_label": lab,
-                "pending_count": cnt,
-            }
-        )
+def _ordered_rows(pdfs, order=("ts", "event_id")) -> pd.DataFrame | None:
+    """``_concat_rows`` in event order. Concatenates every chunk BEFORE
+    sorting (chunk boundaries do not respect event order); the stable
+    sort keeps arrival order on ties."""
+    rows = _concat_rows(pdfs)
+    if rows is None:
+        return None
+    return rows.sort_values(list(order), kind="mergesort")
 
-    return _fanout(df, key).groupBy(key).applyInPandas(fold, HYST_SCHEMA)
+
+def _rows_frame(rows, cols) -> pd.DataFrame:
+    """A step's ``rows`` — a DataFrame, a list of row dicts or tuples,
+    or one row dict — as one frame in ``cols`` order."""
+    if isinstance(rows, dict):
+        rows = [rows]
+    return pd.DataFrame(rows, columns=cols)
 
 
 def _fanout(df: DataFrame, key: str) -> DataFrame:
@@ -147,6 +155,54 @@ def _fanout(df: DataFrame, key: str) -> DataFrame:
     A user-specified repartition with an explicit partition count is
     exempt from AQE coalescing, so the fold keeps full-core fan-out."""
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism, key)
+
+
+def _keyed_batch(df: DataFrame, key: str, step, out_schema) -> DataFrame:
+    """The batch driver of a keyed step: group ``df`` by ``key`` and run
+    ``step(key_tuple, [pdf], None)`` once over each key's whole history;
+    the rows become one frame exactly as in ``_keyed_fold``."""
+    cols = out_schema.fieldNames()
+
+    def fn(k, pdf):
+        rows, _ = step(k, [pdf], None)
+        return _rows_frame(rows, cols)
+
+    return _fanout(df, key).groupBy(key).applyInPandas(fn, out_schema)
+
+
+def _hysteresis_step(
+    key, pdfs, prior, confirm_k: int = 2, label_col: str = "raw_label"
+):
+    """Per-key k-confirmation fold: carried (confirmed, pending, count),
+    pending "" = none. Emits the ``HYST_SCHEMA`` columns (the stream
+    keeps all but ``pending_count``)."""
+    confirmed, pending, count = prior if prior is not None else ("RANGE", "", 0)
+    rows = _ordered_rows(pdfs)
+    if rows is None:
+        return [], (confirmed, pending, count)
+    labs, cnts, (confirmed, pending, count) = _hysteresis_fold(
+        rows[label_col], confirm_k, confirmed, pending or None, count
+    )
+    out = pd.DataFrame(
+        {
+            "user_id": rows["user_id"].values,
+            "event_id": rows["event_id"].values,
+            "raw_label": rows[label_col].values,
+            "confirmed_label": labs,
+            "pending_count": cnts,
+        }
+    )
+    return out, (confirmed, pending or "", count)
+
+
+def hysteresis(df: DataFrame, label_col: str, confirm_k: int = 2) -> DataFrame:
+    """G16: per-key label stream with k-confirmation flips.
+
+    Input needs (user_id, ts, event_id, label_col); output one row per
+    input row with the confirmed label and pending counter.
+    """
+    step = partial(_hysteresis_step, confirm_k=confirm_k, label_col=label_col)
+    return _keyed_batch(df, "user_id", step, HYST_SCHEMA)
 
 
 LEDGER_SCHEMA = T.StructType(
@@ -166,6 +222,23 @@ LEDGER_SCHEMA = T.StructType(
     ]
 )
 
+# THE position policy of every FSM in the engine: the batch and stream
+# operators, the fused live step and the recursive-CTE oracles
+FSM_POLICY = dict(
+    z_entry=1.5, tp_pct=0.01, sl_pct=0.01, max_hold_secs=86400.0,
+    margin=50.0, leverage=25.0,
+)
+
+FSM_STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("seq", T.IntegerType()),
+        T.StructField("qty", T.DoubleType()),  # -1.0 = not yet sized
+        T.StructField("side", T.StringType()),  # "" = flat
+        T.StructField("entry_ts_us", T.LongType()),
+        T.StructField("entry_price", T.DoubleType()),
+    ]
+)
+
 
 def _fsm_step(
     pdf: pd.DataFrame,
@@ -177,12 +250,14 @@ def _fsm_step(
     max_hold_secs: float,
     margin: float,
     leverage: float,
+    final: bool = False,
 ) -> list[tuple]:
     """One FSM pass over time-ordered rows, mutating carried state —
-    THE shared kernel for batch (applyInPandas, fresh state + EOD
-    close) and streaming (applyInPandasWithState, state persisted
-    across micro-batches). ``st`` keys: uid, seq, qty (sized from the
-    first observed price), pos (open position dict or None).
+    the kernel of ``_position_step``. ``st`` keys: uid, seq, qty (sized
+    from the first observed price), pos (open position dict or None).
+    ``final`` marks the key's last rows: a position still open after
+    them closes at the last row with reason EOD (batch only — a stream
+    keeps it open awaiting more data).
 
     r13 vectorization (guide §4.2): the original row-at-a-time
     ``itertuples`` walk cost ~0.6 ms/row of pure-Python work and was
@@ -197,11 +272,13 @@ def _fsm_step(
     IDENTICAL by construction: entries are only checked while flat
     (from the row after an exit), exits only from the row after the
     entry, reason priority TP > SL > TIME evaluated at the firing
-    row, and every float is computed with the same IEEE ops on the
-    same float64 values (held = ns-diff / 1e9 == Timedelta
-    .total_seconds(); change/pnl unchanged expressions). Pinned by
-    the FSM split-invariance seeds, the batch<->stream agreement
-    tests, and the hash oracles of the whole ledger family.
+    row. Every closed trade, EOD included, is built by ``close``:
+    held = exact integer ns difference / 1e9, the correctly rounded
+    quotient the oracle's µs difference / 1e6 also gives (pandas'
+    ``Timedelta.total_seconds()`` can differ from it in the last ulp,
+    which no 6-decimal output sees). Pinned by the FSM split-invariance
+    seeds, the batch<->stream agreement tests, and the hash oracles of
+    the whole ledger family.
 
     Contract: every ``ts`` is a real timestamp — a NaT row raises
     ``ValueError`` (it has no holding time; the tick loaders drop null
@@ -223,6 +300,18 @@ def _fsm_step(
     if st["qty"] is None:
         st["qty"] = round(margin * leverage / max(float(px[0]), 1e-9), 6)
     qty = st["qty"]
+
+    def close(pos, k, reason):
+        direction = 1.0 if pos["side"] == "LONG" else -1.0
+        ep = pos["entry_price"]
+        held = (ts_ns[k] - pd.Timestamp(pos["entry_ts"]).value) / 1e9
+        pnl = (float(px[k]) - ep) * direction * qty
+        st["seq"] += 1
+        rows.append(
+            (uid, st["seq"], pos["side"], pos["entry_ts"], ts_col.iloc[k],
+             ep, float(px[k]), qty, pnl, pnl / margin, reason, float(held))
+        )
+
     with np.errstate(invalid="ignore"):
         cand = np.flatnonzero(np.abs(z) >= z_entry)
     pos = st["pos"]
@@ -263,65 +352,70 @@ def _fsm_step(
                 reason = "SL"
             else:
                 reason = "TIME"
-            st["seq"] += 1
-            pnl = (float(px[k]) - ep) * direction * qty
-            rows.append(
-                (uid, st["seq"], pos["side"], pos["entry_ts"], ts_col.iloc[k],
-                 ep, float(px[k]), qty, pnl, pnl / margin,
-                 reason, float(held[off]))
-            )
+            close(pos, k, reason)
             pos = None
             i = k + 1
+    if final and pos is not None:
+        close(pos, n - 1, "EOD")
+        pos = None
     st["pos"] = pos
     return rows
 
 
-def position_fsm(
-    decisions: DataFrame,
-    z_entry: float = 1.5,
-    tp_pct: float = 0.01,
-    sl_pct: float = 0.01,
-    max_hold_secs: float = 86400.0,
-    margin: float = 50.0,
-    leverage: float = 25.0,
-    key: str = "user_id",
-) -> DataFrame:
+def _fsm_unpack(uid: int, carry) -> dict:
+    """Stored FSM carry ``(seq, qty, side, entry_ts_us, entry_price)``
+    (qty -1.0 = not yet sized, side "" = flat; None for a new key) →
+    the ``st`` dict ``_fsm_step`` mutates."""
+    if carry is None:
+        return {"uid": uid, "seq": 0, "qty": None, "pos": None}
+    seq, qty, side, ets_us, epx = carry
+    pos = (
+        None
+        if side == ""
+        else {
+            "side": side,
+            "entry_ts": pd.Timestamp(ets_us * 1000),
+            "entry_price": epx,
+        }
+    )
+    return {"uid": uid, "seq": seq, "qty": None if qty < 0 else qty, "pos": pos}
+
+
+def _fsm_pack(st: dict) -> tuple:
+    """``_fsm_unpack``'s inverse: the ``st`` dict → the stored carry."""
+    pos = st["pos"]
+    return (
+        int(st["seq"]),
+        -1.0 if st["qty"] is None else float(st["qty"]),
+        pos["side"] if pos else "",
+        int(pd.Timestamp(pos["entry_ts"]).value // 1000) if pos else 0,
+        float(pos["entry_price"]) if pos else 0.0,
+    )
+
+
+def _position_step(key, pdfs, prior, final: bool = False):
+    """Per-key position FSM over the ``FSM_STATE_SCHEMA`` tuple under
+    ``FSM_POLICY``; ``final`` closes a still-open position as EOD."""
+    st = _fsm_unpack(int(key[0]), prior)
+    rows = _ordered_rows(pdfs)
+    out = [] if rows is None else _fsm_step(rows, st, final=final, **FSM_POLICY)
+    return out, _fsm_pack(st)
+
+
+def position_fsm(decisions: DataFrame) -> DataFrame:
     """H6: one-position-per-key lifecycle over a decision stream.
 
     Input: (user_id, ts, event_id, price, z). Entry when flat and
     |z| ≥ z_entry (LONG if z>0 else SHORT) — filled at that row's
     price (deterministic fill, replacing the reference's live order
     I/O, SURVEY §7). Exit on TP/SL (±pct from entry, regime-free
-    simplification of G12) or time-stop. Emits one ledger row per
-    closed trade; a still-open position at end-of-data is closed at
-    the last price with reason EOD (so batch output is total).
+    simplification of G12) or time-stop, all under ``FSM_POLICY``.
+    Emits one ledger row per closed trade; a still-open position at
+    end-of-data is closed at the last price with reason EOD (so batch
+    output is total).
     """
-    params = dict(
-        z_entry=z_entry, tp_pct=tp_pct, sl_pct=sl_pct,
-        max_hold_secs=max_hold_secs, margin=margin, leverage=leverage,
-    )
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
-        uid = int(pdf[key].iloc[0]) if len(pdf) else None
-        st = {"uid": uid, "seq": 0, "qty": None, "pos": None}
-        rows = _fsm_step(pdf, st, **params)
-        pos = st["pos"]
-        if pos is not None and len(pdf):
-            last = pdf.iloc[-1]
-            px, ts = float(last["price"]), last["ts"]
-            direction = 1.0 if pos["side"] == "LONG" else -1.0
-            pnl = (px - pos["entry_price"]) * direction * st["qty"]
-            held = (ts - pos["entry_ts"]).total_seconds()
-            st["seq"] += 1
-            rows.append(
-                (uid, st["seq"], pos["side"], pos["entry_ts"], ts,
-                 pos["entry_price"], px, st["qty"], pnl, pnl / margin,
-                 "EOD", held)
-            )
-        return pd.DataFrame(rows, columns=[f.name for f in LEDGER_SCHEMA.fields])
-
-    return _fanout(decisions, key).groupBy(key).applyInPandas(fold, LEDGER_SCHEMA)
+    step = partial(_position_step, final=True)
+    return _keyed_batch(decisions, "user_id", step, LEDGER_SCHEMA)
 
 
 # --- exact micro-unit ledger arithmetic -----------------------------------

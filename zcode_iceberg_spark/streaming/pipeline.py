@@ -11,9 +11,9 @@ aggregation expressions run under watermarks:
   window (data_manager.py:626-629 keeps +120 s before evicting);
 - tumbling/sliding windows via ``F.window`` (H1/H2);
 - stateful hysteresis via ``applyInPandasWithState`` carrying
-  (confirmed, pending, count) per key — the SAME transition function
-  as the batch fold (operators/stateful.py:_hysteresis_fold), so
-  batch and streaming provably agree;
+  (confirmed, pending, count) per key — the SAME step as the batch
+  operator (operators/stateful.py:_hysteresis_step), so batch and
+  streaming provably agree;
 - ``Trigger.AvailableNow`` drains the fixture then stops (test mode);
   in production the same queries run continuously (H7 cadence is the
   trigger interval).
@@ -24,13 +24,22 @@ watermarks bound it. File source → Kafka source is a one-line swap
 
 Keyed-fold contract. Every stateful stream here is one pure per-key
 transition ``step(key, pdfs, prior) -> (rows, new_state)`` run by
-``_keyed_fold``, the only place that touches GroupState:
+``_keyed_fold``, the only place that touches GroupState. The hysteresis
+and position steps also have a batch driver,
+``operators/stateful.py:_keyed_batch``, which calls the same step once
+per key with ``prior=None`` over the key's whole history; a step with
+an end-of-data action takes a ``final`` flag that only batch callers
+set (the FSM's EOD close). Both drivers build the output frame with
+``_rows_frame``.
 
 - ordering: a key's micro-batch rows can span several Arrow chunks,
   and chunk boundaries do not respect event order, so every
   order-dependent step concatenates ALL chunks before sorting
   (``_ordered_rows``) — by (ts, event_id) unless its batch twin
-  orders otherwise;
+  orders otherwise; a tie-holdback step (z, live) hands the
+  concatenated chunks unsorted (``_concat_rows``) to
+  ``_tie_holdback``, whose sort over pending + new rows is its only
+  one;
 - state: ``prior`` is the stored tuple in the ``*_STATE_SCHEMA`` field
   order (None for a new key); the new state is written BEFORE the
   output frame is yielded, so correctness never depends on the engine
@@ -56,7 +65,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
 
-from zcode_iceberg_spark.operators.stateful import _hysteresis_fold
+from zcode_iceberg_spark.operators.stateful import (
+    FSM_STATE_SCHEMA,
+    LEDGER_SCHEMA,
+    _concat_rows,
+    _hysteresis_step,
+    _ordered_rows,
+    _position_step,
+    _rows_frame,
+)
 from zcode_iceberg_spark.sources.tables import normalize_ts, ts_micros
 
 # Current driver layout: ts is parquet timestamp[us] tz-naive → NTZ.
@@ -289,16 +306,6 @@ def tumbling_ohlc_stream(ticks: DataFrame, minutes: int = 60) -> DataFrame:
     )
 
 
-def _ordered_rows(pdfs, order=("ts", "event_id")) -> pd.DataFrame | None:
-    """A key's micro-batch rows in event order, or None when the call
-    delivered no rows. Concatenates every chunk BEFORE sorting (see the
-    module docstring); the stable sort keeps arrival order on ties."""
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if not chunks:
-        return None
-    return pd.concat(chunks).sort_values(list(order), kind="mergesort")
-
-
 def _keyed_fold(
     df: DataFrame, keys, step, out_schema, state_schema, deadline=None
 ) -> DataFrame:
@@ -325,10 +332,9 @@ def _keyed_fold(
             at = deadline(new_state) if deadline is not None else None
             if at is not None:
                 state.setTimeoutTimestamp(max(at, wm + 1))
-        if isinstance(rows, dict):
-            rows = [rows]
-        if len(rows):
-            yield pd.DataFrame(rows, columns=cols)
+        out = _rows_frame(rows, cols)
+        if len(out):
+            yield out
 
     timeout = (
         GroupStateTimeout.NoTimeout
@@ -356,27 +362,6 @@ HYST_OUT_SCHEMA = T.StructType(
         T.StructField("confirmed_label", T.StringType()),
     ]
 )
-
-
-def _hysteresis_step(key, pdfs, prior, confirm_k: int = 2):
-    """Per-key k-confirmation fold: carried (confirmed, pending, count),
-    pending "" = none."""
-    confirmed, pending, count = prior if prior is not None else ("RANGE", "", 0)
-    rows = _ordered_rows(pdfs)
-    if rows is None:
-        return [], (confirmed, pending, count)
-    labs, _, (confirmed, pending, count) = _hysteresis_fold(
-        rows["raw_label"], confirm_k, confirmed, pending or None, count
-    )
-    out = pd.DataFrame(
-        {
-            "user_id": rows["user_id"].values,
-            "event_id": rows["event_id"].values,
-            "raw_label": rows["raw_label"].values,
-            "confirmed_label": labs,
-        }
-    )
-    return out, (confirmed, pending or "", count)
 
 
 def hysteresis_stream(labeled: DataFrame, confirm_k: int = 2) -> DataFrame:
@@ -1111,17 +1096,6 @@ def run_available_now(df: DataFrame, out_dir: str, checkpoint: str) -> None:
     q.awaitTermination()
 
 
-FSM_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("seq", T.IntegerType()),
-        T.StructField("qty", T.DoubleType()),  # -1.0 = not yet sized
-        T.StructField("side", T.StringType()),  # "" = flat
-        T.StructField("entry_ts_us", T.LongType()),
-        T.StructField("entry_price", T.DoubleType()),
-    ]
-)
-
-
 ZS_STATE_SCHEMA = T.StructType(
     [
         T.StructField("win_ts", T.ArrayType(T.LongType())),
@@ -1301,7 +1275,9 @@ def _pend_unpack(p_ts, p_eid, p_px, p_qty, p_buy, p_sig=None) -> pd.DataFrame:
     return pd.DataFrame(cols)
 
 
-def _pend_pack(pend: pd.DataFrame, with_sig: bool = False) -> tuple:
+def _pend_pack(pend: pd.DataFrame) -> tuple:
+    """``_pend_unpack``'s inverse (the gate array only when ``pend``
+    carries ``entry_signal``)."""
     packed = (
         [int(v) for v in pend["ts"].astype("int64") // 1000],
         [int(v) for v in pend["event_id"]],
@@ -1309,9 +1285,19 @@ def _pend_pack(pend: pd.DataFrame, with_sig: bool = False) -> tuple:
         [float(v) for v in pend["qty"]],
         [bool(v) for v in pend["is_buy"]],
     )
-    if with_sig:
+    if "entry_signal" in pend:
         packed += ([bool(v) for v in pend["entry_signal"]],)
     return packed
+
+
+def _z_release(batch, zst, pend, timed_out):
+    """The z half of a tie-holdback step: release the complete ts-groups
+    of the carried pending rows plus ``batch`` (this call's rows,
+    unsorted — ``_tie_holdback`` orders them) and z-score them. Returns
+    ``(ready, zs, new_z_state, new_packed_pending)``."""
+    ready, held = _holdback_release(_pend_unpack(*pend), batch, timed_out)
+    zs, zst = _zscore_step(ready, zst)
+    return ready, zs, zst, _pend_pack(held)
 
 
 _ZS_COLS = ["ts", "event_id", "price", "qty", "is_buy"]
@@ -1319,17 +1305,16 @@ _ZS_COLS = ["ts", "event_id", "price", "qty", "is_buy"]
 
 def _zscore_stream_step(key, pdfs, prior, timed_out=False, watermark_ms=-1):
     """Per-key ``zscore_stream`` transition over the ``ZS_STATE_SCHEMA``
-    tuple: release complete ts-groups through ``_holdback_release``
-    and z-score them."""
+    tuple: z-score the complete ts-groups ``_z_release`` lets through."""
     if prior is None:
         prior = [[]] * 8
-    batch = _ordered_rows(pdfs)
-    ready, pend = _holdback_release(
-        _pend_unpack(*prior[3:]),
+    batch = _concat_rows(pdfs)
+    ready, zs, zst, pend = _z_release(
         None if batch is None else batch[_ZS_COLS],
+        prior[:3],
+        prior[3:],
         timed_out,
     )
-    zs, zst = _zscore_step(ready, prior[:3])
     out = pd.DataFrame(
         {
             "user_id": [int(key[0])] * len(ready),
@@ -1339,7 +1324,7 @@ def _zscore_stream_step(key, pdfs, prior, timed_out=False, watermark_ms=-1):
             "z": zs,
         }
     )
-    return out, (*zst, *_pend_pack(pend))
+    return out, (*zst, *pend)
 
 
 def zscore_stream(ticks: DataFrame) -> DataFrame:
@@ -1366,114 +1351,42 @@ def zscore_stream(ticks: DataFrame) -> DataFrame:
     )
 
 
+# z window, FSM carry, held-back ts-group incl. the gate: the state
+# store's persisted layout (pinned field by field in the tests)
 LIVE_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("win_ts", T.ArrayType(T.LongType())),
-        T.StructField("win_sq", T.ArrayType(T.DoubleType())),
-        T.StructField("ring", T.ArrayType(T.DoubleType())),
-        T.StructField("seq", T.IntegerType()),
-        T.StructField("qty", T.DoubleType()),
-        T.StructField("side", T.StringType()),
-        T.StructField("entry_ts_us", T.LongType()),
-        T.StructField("entry_price", T.DoubleType()),
-        # held-back trailing ts-group (_tie_holdback), incl. the gate
-        T.StructField("pend_ts_us", T.ArrayType(T.LongType())),
-        T.StructField("pend_eid", T.ArrayType(T.LongType())),
-        T.StructField("pend_price", T.ArrayType(T.DoubleType())),
-        T.StructField("pend_qty", T.ArrayType(T.DoubleType())),
-        T.StructField("pend_buy", T.ArrayType(T.BooleanType())),
-        T.StructField("pend_sig", T.ArrayType(T.BooleanType())),
-    ]
+    ZS_STATE_SCHEMA.fields[:3]
+    + FSM_STATE_SCHEMA.fields
+    + ZS_STATE_SCHEMA.fields[3:]
+    + [T.StructField("pend_sig", T.ArrayType(T.BooleanType()))]
 )
-
-
-def _fsm_unpack(uid: int, carry) -> dict:
-    """Stored FSM carry ``(seq, qty, side, entry_ts_us, entry_price)``
-    (qty -1.0 = not yet sized, side "" = flat; None for a new key) →
-    the ``st`` dict ``_fsm_step`` mutates."""
-    if carry is None:
-        return {"uid": uid, "seq": 0, "qty": None, "pos": None}
-    seq, qty, side, ets_us, epx = carry
-    pos = (
-        None
-        if side == ""
-        else {
-            "side": side,
-            "entry_ts": pd.Timestamp(ets_us * 1000),
-            "entry_price": epx,
-        }
-    )
-    return {"uid": uid, "seq": seq, "qty": None if qty < 0 else qty, "pos": pos}
-
-
-def _fsm_pack(st: dict) -> tuple:
-    """``_fsm_unpack``'s inverse: the ``st`` dict → the stored carry."""
-    pos = st["pos"]
-    return (
-        int(st["seq"]),
-        -1.0 if st["qty"] is None else float(st["qty"]),
-        pos["side"] if pos else "",
-        int(pd.Timestamp(pos["entry_ts"]).value // 1000) if pos else 0,
-        float(pos["entry_price"]) if pos else 0.0,
-    )
-
-
-def _position_step(key, pdfs, prior, **fsm_params):
-    """Per-key ``position_fsm_stream`` transition over the
-    ``FSM_STATE_SCHEMA`` tuple."""
-    from zcode_iceberg_spark.operators.stateful import _fsm_step
-
-    st = _fsm_unpack(int(key[0]), prior)
-    rows = _ordered_rows(pdfs)
-    out = [] if rows is None else _fsm_step(rows, st, **fsm_params)
-    return out, _fsm_pack(st)
 
 
 _LIVE_COLS = [*_ZS_COLS, "entry_signal"]
-_LIVE_FSM_PARAMS = dict(
-    z_entry=1.5, tp_pct=0.01, sl_pct=0.01, max_hold_secs=86400.0,
-    margin=50.0, leverage=25.0,
-)
 
 
 def _live_step(key, pdfs, prior, timed_out=False, watermark_ms=-1):
     """Per-key ``live_decisions_fsm_stream`` transition over the
-    ``LIVE_STATE_SCHEMA`` tuple: the same tie-group holdback as
-    ``zscore_stream`` — z AND the FSM walk only ever see complete
-    ts-groups (the FSM consumes z, so a partial-group z would
-    contaminate the decision sequence too) — then gated z → FSM."""
-    from zcode_iceberg_spark.operators.stateful import _fsm_step
-
+    ``LIVE_STATE_SCHEMA`` tuple: ``_z_release`` — the same tie-group
+    holdback as ``zscore_stream``, so z AND the FSM walk only ever see
+    complete ts-groups (the FSM consumes z, so a partial-group z would
+    contaminate the decision sequence too) — then gated z →
+    ``_position_step``."""
     if prior is None:
-        zst, carry, pend = ([], [], []), None, [[]] * 6
+        zst, carry, pend = [[]] * 3, None, [[]] * 6
     else:
         zst, carry, pend = prior[:3], prior[3:8], prior[8:]
-    fst = _fsm_unpack(int(key[0]), carry)
-    batch = _ordered_rows(pdfs)
+    batch = _concat_rows(pdfs)
     if batch is not None:
         batch = batch[_LIVE_COLS].assign(
             entry_signal=batch["entry_signal"].fillna(False)
         )
-    ready, pend = _holdback_release(_pend_unpack(*pend), batch, timed_out)
-    rows: list[tuple] = []
-    if len(ready):
-        zs, zst = _zscore_step(ready, zst)
-        gate = ready["entry_signal"].to_numpy()
-        dec = pd.DataFrame(
-            {
-                "ts": ready["ts"].values,
-                "event_id": ready["event_id"].values,
-                "price": ready["price"].values,
-                "z": [z if g else 0.0 for z, g in zip(zs, gate)],
-            }
-        )
-        rows = _fsm_step(dec, fst, **_LIVE_FSM_PARAMS)
-    new_state = (
-        *[list(a) for a in zst],
-        *_fsm_pack(fst),
-        *_pend_pack(pend, with_sig=True),
+    ready, zs, zst, pend = _z_release(batch, zst, pend, timed_out)
+    gate = ready["entry_signal"].to_numpy()
+    dec = ready[["ts", "event_id", "price"]].assign(
+        z=[z if g else 0.0 for z, g in zip(zs, gate)]
     )
-    return rows, new_state
+    rows, carry = _position_step(key, [dec], carry)
+    return rows, (*zst, *carry, *pend)
 
 
 def live_decisions_fsm_stream(gated_ticks: DataFrame) -> DataFrame:
@@ -1482,17 +1395,15 @@ def live_decisions_fsm_stream(gated_ticks: DataFrame) -> DataFrame:
     the signal-score entry gate masks z (the ``entry_signal`` column,
     broadcast-joined upstream by ``live_tick_pipeline`` from the warmup
     score table, evaluated once at definition — a ``LocalTableScan``
-    in every batch), and the SAME ``_fsm_step`` kernel the batch fold
-    uses walks the decisions — feature battery → gate → FSM in one
-    GroupState row, one shuffle. Emits closed-trade ledger rows as
-    they happen.
+    in every batch), and the SAME ``_position_step`` the batch
+    ``position_fsm`` runs walks the decisions — feature battery → gate
+    → FSM in one GroupState row, one shuffle. Emits closed-trade
+    ledger rows as they happen.
 
     Fusing (rather than chaining two applyInPandasWithState stages)
     is also the scale-correct plan: both stages key on user_id, so a
     chain would re-shuffle the tick stream between them for nothing.
     """
-    from zcode_iceberg_spark.operators.stateful import LEDGER_SCHEMA
-
     return _keyed_fold(
         gated_ticks,
         ["user_id"],
@@ -1601,33 +1512,20 @@ def live_tick_pipeline(
     return start, ledger_dir, summary_dir
 
 
-def position_fsm_stream(
-    decisions: DataFrame,
-    z_entry: float = 1.5,
-    tp_pct: float = 0.01,
-    sl_pct: float = 0.01,
-    max_hold_secs: float = 86400.0,
-    margin: float = 50.0,
-    leverage: float = 25.0,
-) -> DataFrame:
+def position_fsm_stream(decisions: DataFrame) -> DataFrame:
     """H6 streaming twin: the position lifecycle FSM under
     ``applyInPandasWithState``, one state row per key carrying
     (trade_seq, sized qty, open position) across micro-batches —
-    the SAME ``_fsm_step`` kernel as the batch fold, so batch and
-    stream provably agree on every CLOSED trade (the batch EOD
-    close has no streaming analog: an open position simply stays
-    in state awaiting more data).
+    the SAME ``_position_step`` as the batch ``position_fsm``, so
+    batch and stream provably agree on every CLOSED trade (the batch
+    EOD close has no streaming analog: a stream never passes
+    ``final``, so an open position simply stays in state awaiting
+    more data).
 
     Input: streaming (user_id, ts, event_id, price, z). Output:
     ledger rows appended as trades close."""
-    from zcode_iceberg_spark.operators.stateful import LEDGER_SCHEMA
-
-    step = partial(
-        _position_step, z_entry=z_entry, tp_pct=tp_pct, sl_pct=sl_pct,
-        max_hold_secs=max_hold_secs, margin=margin, leverage=leverage,
-    )
     return _keyed_fold(
-        decisions, ["user_id"], step, LEDGER_SCHEMA, FSM_STATE_SCHEMA
+        decisions, ["user_id"], _position_step, LEDGER_SCHEMA, FSM_STATE_SCHEMA
     )
 
 

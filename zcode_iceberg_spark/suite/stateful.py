@@ -1,9 +1,10 @@
 """Stateful suite (SURVEY G16, H6, E13): hysteresis, position FSM,
 ledger daily summary.
 
-The hysteresis fold runs as ``applyInPandas`` yet still gets a full
-SQL oracle: k-confirmation hysteresis is equivalent to gaps-and-islands
-— a label is "confirmed" at the k-th row of a consecutive run, and the
+The hysteresis step runs per key under ``applyInPandas`` (the batch
+driver of the same step its stream runs) yet still gets a full SQL
+oracle: k-confirmation hysteresis is equivalent to gaps-and-islands —
+a label is "confirmed" at the k-th row of a consecutive run, and the
 active label at any row is the most recent confirmation event (proof
 sketch in the oracle SQL comments).
 
@@ -152,11 +153,14 @@ FROM conf
 # or NULLs). Row rn+1 is processed by the recursive term: flat + |z| >=
 # z_entry opens; open + TP/SL/TIME closes (emitting the trade on that
 # row) and goes flat — an exit row never re-enters and an entry row
-# never exits, exactly like the fold in operators/stateful.py. The
-# still-open position at max(rn) closes at the last price as EOD.
+# never exits, exactly like operators/stateful.py:_fsm_step. The
+# still-open position at max(rn) closes at the last price as EOD. The
+# policy values are the kernel's own ``FSM_POLICY``.
 
-_FSM_Z_ENTRY, _FSM_TP, _FSM_SL = 1.5, 0.01, 0.01
-_FSM_MAX_HOLD, _FSM_MARGIN, _FSM_LEV = 86400.0, 50.0, 25.0
+_FSM_Z_ENTRY, _FSM_TP, _FSM_SL, _FSM_MAX_HOLD, _FSM_MARGIN, _FSM_LEV = (
+    st.FSM_POLICY[k]
+    for k in ("z_entry", "tp_pct", "sl_pct", "max_hold_secs", "margin", "leverage")
+)
 
 # exit reason for the open position in walk-state `w` hit by row `r`
 # (NULL while flat or while no trigger fires; TP > SL > TIME priority
@@ -372,7 +376,7 @@ def q_live_pipeline_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     win-prob overlay > 0.6) → position FSM → closed-trade ledger.
     This is the BATCH twin of the supervised streaming job
     (streaming/pipeline.py:live_tick_pipeline — same decision shape,
-    same gate, same `_fsm_step` kernel through GroupState); the
+    same gate, same `_position_step` through GroupState); the
     multi-batch agreement test (tests/test_streaming.py) pins
     stream ≡ batch on every closed trade. Oracle = the composed
     recursive-CTE chain (features + gate + z walk), the composition
