@@ -35,30 +35,11 @@ def sf_dir() -> str:
 # exhaustive variants listed here — heavy property/flood matrices, extra
 # seeds of multi-seed invariance suites, crash-resume streaming end-to-ends,
 # and the out-of-window oracle rows. Every contract keeps at least one
-# fast-lane representative (one seed, one agreement test, the in-window +
-# round-touched oracle set); the slow lane (`-m ""` / `-m slow`) still runs
+# fast-lane representative (one seed, one agreement test, the driver-window
+# oracle rows); the slow lane (`-m ""` / `-m slow`) still runs
 # everything for builder rounds. Durations that justified each entry:
 # measured in a full r13 run.
 # ---------------------------------------------------------------------------
-
-# oracle rows kept in the fast lane beyond the driver window: queries whose
-# plan or internals changed in the CURRENT round (update each round)
-TOUCHED_THIS_ROUND = {
-    "decon_overlap_hll",
-    "ann_ivfpq",
-    "ann_ivfpq_recall",
-    "ann_pq",
-    "ann_pq_recall",
-    "equity_compounding",
-    "wp_calibration",
-    "trade_params",
-    "mc_win_prob",
-    "risk_limits",
-    "signal_scores",
-    "rfm_segments_approx",
-    "live_pipeline_summary",
-    "live_pipeline_ledger",
-}
 
 _SLOW_EXPLICIT = {
     # property/flood matrices (each contract keeps a fast sibling)
@@ -91,7 +72,7 @@ _SLOW_EXPLICIT = {
 def pytest_collection_modifyitems(config, items):
     from zcode_iceberg_spark.suite import PRIORITY
 
-    fast_oracles = set(PRIORITY) | TOUCHED_THIS_ROUND
+    fast_oracles = set(PRIORITY)
     slow = pytest.mark.slow
     for item in items:
         short = item.nodeid.split("/")[-1]

@@ -17,6 +17,7 @@ import io
 from pyspark.sql import functions as F
 
 from zcode_iceberg_spark.suite.llm import (
+    _two_day_ingest,
     build_incremental_hash_table,
     incremental_dedup_against,
     q_dedup_incremental,
@@ -34,6 +35,26 @@ def test_persisted_matches_selfcontained(spark, sf_dir):
     got = q_dedup_incremental_persisted(spark, sf_dir)
     want = q_dedup_incremental(spark, sf_dir)
     assert _rows(got) == _rows(want)
+
+
+def test_two_day_ingest_is_first_seen_wins(spark, tmp_path):
+    # cut 10: day 0 is ids < 5, day 1 ids 5..9, id 12 is the batch
+    src = spark.createDataFrame(
+        [(1, "a", "d0"), (2, "b", "d0"), (6, "a", "d1"), (7, "c", "d1"),
+         (12, "e", "batch")],
+        "doc_id BIGINT, k STRING, v STRING",
+    )
+    state = str(tmp_path / "ingest")
+
+    def ingest() -> set:
+        out = _two_day_ingest(spark, state, 10, "doc_id", "k", src.filter)
+        assert out == f"{state}/compact"
+        got = spark.read.parquet(out).select("doc_id", "k", "v")
+        return {tuple(r) for r in got.collect()}
+
+    want = {(1, "a", "d0"), (2, "b", "d0"), (7, "c", "d1")}
+    assert ingest() == want  # "a" keeps its day-0 row, "c" is inserted
+    assert ingest() == want  # a rebuild into the same dir starts clean
 
 
 def test_state_build_is_merge_idempotent(spark, sf_dir, tmp_path):

@@ -63,8 +63,10 @@ from pyspark.sql import functions as F
 from zcode_iceberg_spark.sources.tables import load_table
 from zcode_iceberg_spark.suite import Query
 from zcode_iceberg_spark.suite.llm import (
-    INCR_SPLIT_FRAC,
     _build_scratch,
+    _cut_cte,
+    _fresh_dir,
+    _incr_cut,
     _near_canon_state,
     _reuse,
 )
@@ -149,14 +151,12 @@ def _bloom_split(
     """(historical hashes, batch hashes, cut) under the suite-wide
     incremental split rule."""
     d = load_table(spark, sf_dir, "documents")
-    cut = d.agg(
-        F.floor(F.lit(INCR_SPLIT_FRAC) * (F.max("doc_id") + 1)).cast("bigint")
-    ).collect()[0][0]
+    cut = _incr_cut(d, "doc_id")
     hashed = d.select("doc_id", F.md5("text").alias("content_hash"))
     return (
         hashed.filter(F.col("doc_id") < cut),
         hashed.filter(F.col("doc_id") >= cut),
-        int(cut),
+        cut,
     )
 
 
@@ -226,13 +226,9 @@ def build_bloom_state(
 
     Returns (bits_dir, cut). Rebuilt from scratch per call so the
     suite query stays deterministic whatever a prior run left."""
-    import shutil as _shutil
-    from pathlib import Path as _Path
-
     from zcode_iceberg_spark.sources.sinks import merge_bitwise_or
 
-    if _Path(state_dir).exists():
-        _shutil.rmtree(state_dir)
+    _fresh_dir(state_dir)
     hist, _, cut = _bloom_split(spark, sf_dir)
     day0 = hist.filter(F.col("doc_id") < cut // 2)
     day1 = hist.filter(F.col("doc_id") >= cut // 2)
@@ -267,10 +263,7 @@ def q_dedup_bloom_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BP = _bloom_pos_sql("content_hash")
 SQL_DEDUP_BLOOM = f"""
-WITH cut AS (
-  SELECT CAST(floor({INCR_SPLIT_FRAC} * (max(doc_id) + 1)) AS BIGINT) AS c
-  FROM documents
-),
+WITH {_cut_cte()},
 hashed AS (SELECT doc_id, md5(text) AS content_hash FROM documents),
 hist AS (SELECT h.* FROM hashed h, cut WHERE h.doc_id < cut.c),
 new AS (SELECT h.* FROM hashed h, cut WHERE h.doc_id >= cut.c),
@@ -444,12 +437,8 @@ def q_cms_heavy_hitters_persisted(spark: SparkSession, sf_dir: str) -> DataFrame
     (replay-idempotence pinned in tests/test_streaming.py)."""
     from zcode_iceberg_spark.streaming.pipeline import cms_ingest_step
 
-    import shutil as _shutil
-    from pathlib import Path as _Path
-
     state = _build_scratch("zspark_cms_state_", sf_dir)
-    if _Path(state).exists():
-        _shutil.rmtree(state)
+    _fresh_dir(state)
     d = load_table(spark, sf_dir, "documents")
     mid = d.agg(F.floor(F.max("doc_id") / 2).cast("bigint")).collect()[0][0]
     cms_ingest_step(d.filter(F.col("doc_id") <= mid), 0, state)

@@ -692,8 +692,11 @@ def _near_canon_state(spark: SparkSession, sf_dir: str) -> None:
     ).save()
 
 
-SQL_DEDUP_NEAR = f"""
-WITH {CHSH_CTE},
+# The LSH near-dup graph as oracle CTEs (shingles → minhash → bands →
+# candidate pairs at estimated Jaccard ≥ NEARDUP_EST_MIN → both-way
+# ``edges(doc_id, nbr)``), shared by the canonical-map, connected-
+# component and PageRank oracles.
+NEAR_EDGE_CTES = f"""{CHSH_CTE},
 {HASHES_CTE},
 {SIG_CTE},
 {BANDS_CTE},
@@ -712,7 +715,11 @@ edges AS (
   SELECT doc1 AS doc_id, doc2 AS nbr FROM cand
   UNION ALL
   SELECT doc2 AS doc_id, doc1 AS nbr FROM cand
-),
+)"""
+
+
+SQL_DEDUP_NEAR = f"""
+WITH {NEAR_EDGE_CTES},
 canon AS (SELECT doc_id, min(nbr) AS min_nbr FROM edges GROUP BY doc_id)
 SELECT d.doc_id,
        least(d.doc_id, coalesce(c.min_nbr, d.doc_id)) AS canonical_id,
@@ -723,6 +730,86 @@ FROM documents d LEFT JOIN canon c ON d.doc_id = c.doc_id
 
 INCR_SPLIT_FRAC = 0.8  # docs below the id cut are the "historical" corpus
 TAKEDOWN_MOD = 13  # historical ids divisible by this are taken down
+
+
+def _incr_cut(df: DataFrame, id_col: str) -> int:
+    """The history/batch split of every persisted-ingest query: ids
+    below ``floor(INCR_SPLIT_FRAC · (max id + 1))`` are the historical
+    corpus, the rest the incoming batch. One agg job."""
+    return df.agg(
+        F.floor(F.lit(INCR_SPLIT_FRAC) * (F.max(id_col) + 1)).cast("bigint")
+    ).collect()[0][0]
+
+
+def _cut_cte(
+    id_col: str = "doc_id", table: str = "documents", head: str = "cut AS"
+) -> str:
+    """:func:`_incr_cut` as a one-row oracle CTE with column ``c``;
+    ``head`` names it (the PQ oracles materialize theirs as ``cutt``)."""
+    return f"""{head} (
+  SELECT CAST(floor({INCR_SPLIT_FRAC} * (max({id_col}) + 1)) AS BIGINT) AS c
+  FROM {table}
+)"""
+
+
+def _fresh_dir(path: str) -> None:
+    """Remove a builder's state dir, so every build starts empty and
+    the suite query stays deterministic whatever a prior run left."""
+    import shutil as _shutil
+    from pathlib import Path as _Path
+
+    if _Path(path).exists():
+        _shutil.rmtree(path)
+
+
+def _two_day_ingest(
+    spark: SparkSession,
+    state_dir: str,
+    cut: int,
+    id_col: str,
+    key: str,
+    rows,
+    raw: str = "raw",
+    compact: str = "compact",
+    model=None,
+) -> str:
+    """THE two-day ingest of every persisted row ledger (content
+    hashes, substring windows, IVF assignments, PQ codes), end to end
+    through the maintenance layer (sources/sinks.py):
+
+    1. ``state_dir`` is cleared (:func:`_fresh_dir`), and ``model()``,
+       when given, writes the builder's model table into it (the IVF
+       centroids, the PQ codebooks) for ``rows`` to read;
+    2. day 0: the older historical half, ``rows(id < cut // 2)``, is
+       written as the initial ``{state_dir}/{raw}`` table;
+    3. day 1: ``rows(cut // 2 <= id < cut)`` minus the ``key``s the
+       table already holds is ``merge_upsert``ed in — first-seen-wins,
+       the passage-ledger rule (append order gives day 0 the smaller
+       ids); a replay of day 1 merges nothing new, so the table is
+       unchanged (idempotent re-ingest);
+    4. ``compact_parquet`` rewrites the accumulated files to target
+       size into ``{state_dir}/{compact}`` — the nightly step that keeps
+       years of daily merges from degenerating into a small-files swamp.
+
+    ``rows(pred)`` gives the ledger rows of the ``id_col`` values
+    ``pred`` selects. Returns the compacted dir. The sinks are looked up
+    on their module at call time, so wrappers installed there see every
+    call."""
+    from zcode_iceberg_spark.sources import sinks
+
+    _fresh_dir(state_dir)
+    if model is not None:
+        model()
+    ids = F.col(id_col)
+    day_cut = cut // 2
+    raw_dir, compact_dir = f"{state_dir}/{raw}", f"{state_dir}/{compact}"
+    rows(ids < day_cut).write.parquet(raw_dir)
+    novel = rows((ids >= day_cut) & (ids < cut)).join(
+        spark.read.parquet(raw_dir).select(key), key, "left_anti"
+    )
+    sinks.merge_upsert(spark, raw_dir, novel, key)
+    sinks.compact_parquet(spark, raw_dir, compact_dir)
+    return compact_dir
 
 
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -736,9 +823,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     content_hash; at 100 TB the historical side is a compacted hash
     table read, not a text scan."""
     d = load_table(spark, sf_dir, "documents")
-    cut = d.agg(
-        F.floor(F.lit(INCR_SPLIT_FRAC) * (F.max("doc_id") + 1)).cast("bigint")
-    ).collect()[0][0]
+    cut = _incr_cut(d, "doc_id")
     hashed = d.select("doc_id", F.md5("text").alias("content_hash"))
     old_hashes = hashed.filter(F.col("doc_id") < cut).select("content_hash")
     new = hashed.filter(F.col("doc_id") >= cut)
@@ -755,10 +840,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_DEDUP_INCREMENTAL = f"""
-WITH cut AS (
-  SELECT CAST(floor({INCR_SPLIT_FRAC} * (max(doc_id) + 1)) AS BIGINT) AS c
-  FROM documents
-),
+WITH {_cut_cte()},
 hashed AS (SELECT doc_id, md5(text) AS content_hash FROM documents),
 new AS (SELECT h.* FROM hashed h, cut WHERE h.doc_id >= cut.c),
 old AS (SELECT h.content_hash FROM hashed h, cut WHERE h.doc_id < cut.c),
@@ -815,59 +897,28 @@ def build_incremental_hash_table(
     spark: SparkSession, sf_dir: str, state_dir: str
 ) -> tuple[str, int]:
     """Materialize the historical content-hash table the daily-ingest
-    dedup story reads, end-to-end through the maintenance layer
-    (sources/sinks.py) instead of a per-run re-hash of the raw corpus:
-
-    1. day-0 ingest: hash the older historical half, key by
-       content_hash (first_doc_id = min id), write the initial table;
-    2. day-1 ingest: hash the newer half, keep only NOVEL hashes
-       (first-seen-wins, the passage-ledger rule — append order gives
-       day-0 the smaller ids) and ``merge_upsert`` them in — a replay
-       of day-1 re-merges the same rows and the table is unchanged
-       (idempotent re-ingest);
-    3. compaction: ``compact_parquet`` rewrites the accumulated files
-       to target size — the nightly step that keeps years of daily
-       merges from degenerating into a small-files swamp.
+    dedup story reads, through the maintenance layer instead of a
+    per-run re-hash of the raw corpus: one row per content_hash
+    (first_doc_id = min id, n_docs), ingested over two days by
+    :func:`_two_day_ingest` into ``raw`` and compacted into ``compact``.
 
     Returns (compacted_dir, cut): queries dedup new batches against
     the COMPACTED table — 16-byte hashes only, the raw historical
-    text is never rescanned. Rebuilt from scratch each call so the
-    suite query stays deterministic whatever state a prior run left.
-    """
-    import shutil as _shutil
-    from pathlib import Path as _Path
-
-    from zcode_iceberg_spark.sources.sinks import compact_parquet, merge_upsert
-
-    if _Path(state_dir).exists():
-        _shutil.rmtree(state_dir)
+    text is never rescanned."""
     d = load_table(spark, sf_dir, "documents")
-    cut = d.agg(
-        F.floor(F.lit(INCR_SPLIT_FRAC) * (F.max("doc_id") + 1)).cast("bigint")
-    ).collect()[0][0]
+    cut = _incr_cut(d, "doc_id")
     hashed = d.select("doc_id", F.md5("text").alias("content_hash"))
-    day_cut = cut // 2
-    raw_dir = f"{state_dir}/raw"
 
-    def keyed(df: DataFrame) -> DataFrame:
-        return df.groupBy("content_hash").agg(
+    def keyed(ids) -> DataFrame:
+        return hashed.filter(ids).groupBy("content_hash").agg(
             F.min("doc_id").alias("first_doc_id"),
             F.count(F.lit(1)).alias("n_docs"),
         )
 
-    keyed(hashed.filter(F.col("doc_id") < day_cut)).write.parquet(raw_dir)
-    day1 = keyed(
-        hashed.filter((F.col("doc_id") >= day_cut) & (F.col("doc_id") < cut))
+    compact_dir = _two_day_ingest(
+        spark, state_dir, cut, "doc_id", "content_hash", keyed
     )
-    novel = day1.join(
-        spark.read.parquet(raw_dir).select("content_hash"),
-        "content_hash",
-        "left_anti",
-    )
-    merge_upsert(spark, raw_dir, novel, "content_hash")
-    compact_dir = f"{state_dir}/compact"
-    compact_parquet(spark, raw_dir, compact_dir)
-    return compact_dir, int(cut)
+    return compact_dir, cut
 
 
 def incremental_dedup_against(
@@ -937,17 +988,11 @@ def build_neardup_state(
     on the persisted band table: historical TEXT is never re-shingled.
     Returns (bands_dir, sigs_dir, cut). Rebuilt per call so the suite
     query stays deterministic."""
-    import shutil as _shutil
-    from pathlib import Path as _Path
-
     from zcode_iceberg_spark.sources.sinks import compact_parquet
 
-    if _Path(state_dir).exists():
-        _shutil.rmtree(state_dir)
+    _fresh_dir(state_dir)
     d = load_table(spark, sf_dir, "documents")
-    cut = d.agg(
-        F.floor(F.lit(INCR_SPLIT_FRAC) * (F.max("doc_id") + 1)).cast("bigint")
-    ).collect()[0][0]
+    cut = _incr_cut(d, "doc_id")
     hist = d.filter(F.col("doc_id") < cut)
     sig = _reuse(tx.minhash_signatures(hist, "doc_id", "text"))
     sig.write.parquet(f"{state_dir}/sigs_raw")
@@ -961,7 +1006,7 @@ def build_neardup_state(
     sig.unpersist()
     compact_parquet(spark, f"{state_dir}/bands_raw", f"{state_dir}/bands")
     compact_parquet(spark, f"{state_dir}/sigs_raw", f"{state_dir}/sigs")
-    return f"{state_dir}/bands", f"{state_dir}/sigs", int(cut)
+    return f"{state_dir}/bands", f"{state_dir}/sigs", cut
 
 
 def q_neardup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1088,10 +1133,7 @@ def q_dedup_ledger_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_DEDUP_LEDGER_BUILD = f"""
-WITH cut AS (
-  SELECT CAST(floor({INCR_SPLIT_FRAC} * (max(doc_id) + 1)) AS BIGINT) AS c
-  FROM documents
-),
+WITH {_cut_cte()},
 hashed AS (SELECT doc_id, md5(text) AS content_hash FROM documents),
 day0 AS (
   SELECT content_hash, min(doc_id) AS first_doc_id, count(*) AS n_docs
@@ -1160,10 +1202,7 @@ WITH {CHSH_CTE},
 {HASHES_CTE},
 {SIG_CTE},
 {BANDS_CTE},
-cut AS (
-  SELECT CAST(floor({INCR_SPLIT_FRAC} * (max(doc_id) + 1)) AS BIGINT) AS c
-  FROM documents
-),
+{_cut_cte()},
 hist AS (
   SELECT b.* FROM bands b, cut WHERE b.doc_id < cut.c
 )
@@ -1184,10 +1223,7 @@ WITH {CHSH_CTE},
 {HASHES_CTE},
 {SIG_CTE},
 {BANDS_CTE},
-cut AS (
-  SELECT CAST(floor({INCR_SPLIT_FRAC} * (max(doc_id) + 1)) AS BIGINT) AS c
-  FROM documents
-),
+{_cut_cte()},
 cand AS (
   SELECT a.doc_id AS nid, b.doc_id AS hid
   FROM bands a
@@ -1444,26 +1480,7 @@ def q_dedup_cc_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CC transitive-closure CTE chain (shingles → minhash → bands → LSH
 # candidate pairs → recursive reach), shared by the dedup_cc /
 # dedup_cc_twostar oracle and the canonical-selection oracle below.
-CC_REACH_CTES = f"""{CHSH_CTE},
-{HASHES_CTE},
-{SIG_CTE},
-{BANDS_CTE},
-cand AS (
-  SELECT a.doc_id AS doc1, b.doc_id AS doc2
-  FROM bands a
-  JOIN bands b ON a.band_id = b.band_id AND a.bucket_key = b.bucket_key
-              AND a.doc_id < b.doc_id
-  JOIN sig sa ON sa.doc_id = a.doc_id
-  JOIN sig sb ON sb.doc_id = b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-  HAVING round(max({_EST_JACCARD_SQL.replace('a.s', 'sa.s').replace('b.s', 'sb.s')}), 6)
-         >= {NEARDUP_EST_MIN}
-),
-edges AS (
-  SELECT doc1 AS doc_id, doc2 AS nbr FROM cand
-  UNION ALL
-  SELECT doc2 AS doc_id, doc1 AS nbr FROM cand
-),
+CC_REACH_CTES = f"""{NEAR_EDGE_CTES},
 reach AS (
   SELECT doc_id, doc_id AS label FROM documents
   UNION
@@ -1761,26 +1778,7 @@ p{k} AS (
 )""")
     chain = ",\n".join(iters)
     return f"""
-WITH {CHSH_CTE},
-{HASHES_CTE},
-{SIG_CTE},
-{BANDS_CTE},
-cand AS (
-  SELECT a.doc_id AS doc1, b.doc_id AS doc2
-  FROM bands a
-  JOIN bands b ON a.band_id = b.band_id AND a.bucket_key = b.bucket_key
-              AND a.doc_id < b.doc_id
-  JOIN sig sa ON sa.doc_id = a.doc_id
-  JOIN sig sb ON sb.doc_id = b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-  HAVING round(max({_EST_JACCARD_SQL.replace('a.s', 'sa.s').replace('b.s', 'sb.s')}), 6)
-         >= {NEARDUP_EST_MIN}
-),
-edges AS (
-  SELECT doc1 AS doc_id, doc2 AS nbr FROM cand
-  UNION ALL
-  SELECT doc2 AS doc_id, doc1 AS nbr FROM cand
-),
+WITH {NEAR_EDGE_CTES},
 deg AS (SELECT doc_id, count(*) AS deg FROM edges GROUP BY doc_id),
 nv AS (SELECT count(*) AS n FROM deg),
 p0 AS (SELECT doc_id, deg, 1.0 / nv.n AS r FROM deg, nv),
@@ -4154,57 +4152,40 @@ def build_pq_state(
     """Materialize the persisted PQ index — the production shape of
     `q_ann_pq` (train-once memoization, the reference's model-reuse
     capability data_manager.py:981-1003 applied to the driver's vector
-    mandate), mirroring `build_ivf_state`'s layout:
+    mandate), mirroring `build_ivf_state`'s layout. Codebooks train
+    ONCE on a fixed-RATE deterministic sample of the HISTORICAL side
+    (vec_id % {PQ_SAMPLE_MOD} == 0 below the cut — at 100 TB the sample
+    is the ~1000-vectors-per-centroid SCALE.md budget; here a fixed
+    modulus keeps the oracle replayable); history is then encoded
+    against them (map-side argmin) as (vec_id, e, codes) rows, keyed by
+    vec_id, and ingested over two days by :func:`_two_day_ingest` into
+    ``codes_raw``/``codes_compact`` — the vector travels WITH its code
+    row, so the exact rerank never re-reads raw history (the IVF
+    assignment-table precedent). The books persist as a (s, cid,
+    centroid) ``books`` table: the {PQ_M}×{PQ_K}×{PQ_SUBDIM}-double
+    "model" every ingest day broadcasts.
 
-    1. codebooks train ONCE on a fixed-RATE deterministic sample of
-       the HISTORICAL side (vec_id % {PQ_SAMPLE_MOD} == 0 below the
-       cut — at 100 TB the sample is the ~1000-vectors-per-centroid
-       SCALE.md budget; here a fixed modulus keeps the oracle
-       replayable) and persist as a (s, cid, centroid) parquet table:
-       the {PQ_M}×{PQ_K}×{PQ_SUBDIM}-double "model" every ingest day
-       broadcasts;
-    2. day-0 ingest: encode the older historical half against the
-       persisted books (map-side argmin) and write (vec_id, e, codes)
-       — the vector travels WITH its code row, so the exact rerank
-       never re-reads raw history (the IVF assignment-table
-       precedent);
-    3. day-1 ingest: encode the newer half, ``merge_upsert`` by
-       vec_id (replay-idempotent);
-    4. ``compact_parquet`` rewrites the daily files to target size.
-
-    Returns (books_dir, codes_dir, cut). Rebuilt per call so the
-    suite query stays deterministic."""
-    import shutil as _shutil
-    from pathlib import Path as _Path
-
-    from zcode_iceberg_spark.sources.sinks import compact_parquet, merge_upsert
-
-    if _Path(state_dir).exists():
-        _shutil.rmtree(state_dir)
+    Returns (books_dir, codes_dir, cut)."""
     emb = _pq_emb(spark, sf_dir)
-    cut = int(
-        emb.agg(
-            F.floor(F.lit(INCR_SPLIT_FRAC) * (F.max("vec_id") + 1)).cast("bigint")
-        ).collect()[0][0]
-    )
+    cut = _incr_cut(emb, "vec_id")
     train = emb.filter(
         (F.col("vec_id") < cut) & (F.col("vec_id") % PQ_SAMPLE_MOD == 0)
     )
     books = _pq_train_books(train)
+
+    def encoded(ids) -> DataFrame:
+        return emb.filter(ids).select("vec_id", "e", *_pq_enc_cols(books))
+
     books_dir = f"{state_dir}/books"
-    spark.createDataFrame(
+    books_df = spark.createDataFrame(
         [(s, cid, c) for s, book in enumerate(books) for cid, c in book],
         "s INT, cid INT, c ARRAY<DOUBLE>",
-    ).write.parquet(books_dir)
-    hist = emb.filter(F.col("vec_id") < cut).select(
-        "vec_id", "e", *_pq_enc_cols(books)
     )
-    day_cut = cut // 2
-    raw_dir = f"{state_dir}/codes_raw"
-    hist.filter(F.col("vec_id") < day_cut).write.parquet(raw_dir)
-    merge_upsert(spark, raw_dir, hist.filter(F.col("vec_id") >= day_cut), "vec_id")
-    codes_dir = f"{state_dir}/codes_compact"
-    compact_parquet(spark, raw_dir, codes_dir)
+    codes_dir = _two_day_ingest(
+        spark, state_dir, cut, "vec_id", "vec_id", encoded,
+        "codes_raw", "codes_compact",
+        model=lambda: books_df.write.parquet(books_dir),
+    )
     return books_dir, codes_dir, cut
 
 
@@ -4282,10 +4263,7 @@ def q_ann_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_ANN_PQ_PERSISTED = f"""
-WITH cutt AS MATERIALIZED (
-  SELECT CAST(floor({INCR_SPLIT_FRAC} * (max(vec_id) + 1)) AS BIGINT) AS c
-  FROM embeddings
-),
+WITH {_cut_cte("vec_id", "embeddings", "cutt AS MATERIALIZED")},
 {_pq_ctes(
     train_where=(
         f"vec_id % {PQ_SAMPLE_MOD} = 0 AND vec_id < (SELECT c FROM cutt)"
@@ -4310,10 +4288,7 @@ def q_ann_pq_persisted_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_ANN_PQ_PERSISTED_DELETE = f"""
-WITH cutt AS MATERIALIZED (
-  SELECT CAST(floor({INCR_SPLIT_FRAC} * (max(vec_id) + 1)) AS BIGINT) AS c
-  FROM embeddings
-),
+WITH {_cut_cte("vec_id", "embeddings", "cutt AS MATERIALIZED")},
 {_pq_ctes(
     train_where=(
         f"vec_id % {PQ_SAMPLE_MOD} = 0 AND vec_id < (SELECT c FROM cutt)"
@@ -4404,10 +4379,7 @@ def _pq_build_digest_sql() -> str:
         for s in range(PQ_M)
     )
     return f"""
-WITH cutt AS MATERIALIZED (
-  SELECT CAST(floor({INCR_SPLIT_FRAC} * (max(vec_id) + 1)) AS BIGINT) AS c
-  FROM embeddings
-),
+WITH {_cut_cte("vec_id", "embeddings", "cutt AS MATERIALIZED")},
 {_pq_ctes(
     train_where=(
         f"vec_id % {PQ_SAMPLE_MOD} = 0 AND vec_id < (SELECT c FROM cutt)"
@@ -5257,57 +5229,37 @@ def build_ivf_state(
     — the vector-index member of the persisted-ingest-state family
     (:func:`build_incremental_hash_table` = exact hashes,
     :func:`build_neardup_state` = LSH bands). Embed once, index
-    incrementally:
+    incrementally: the Lloyd-trained NLIST coarse centroids
+    (``_ivf_cents`` — the ``q_kmeans`` kernel) fit on vec_id < cut only,
+    so later ingest days never retrain (the oracle trains on the same
+    WHERE), and persist as ``cents`` — at 100 TB the tiny "model" every
+    ingest day broadcasts. History is assigned to cells (the vector
+    travels WITH its cell row so probes never re-read raw history),
+    keyed by vec_id, and ingested over two days by
+    :func:`_two_day_ingest` into ``assign_raw``/``assign_compact``.
 
-    1. centroid fit on the HISTORICAL side: the Lloyd-trained NLIST
-       coarse centroids (``_ivf_cents`` — the ``q_kmeans`` kernel),
-       trained on vec_id < cut only so later ingest days never retrain
-       (the oracle trains on the same WHERE). At 100 TB the centroid
-       table is the tiny "model" every ingest day broadcasts;
-    2. day-0 ingest: assign the older historical half to cells, write
-       the initial assignment table (vector travels WITH its cell row
-       so probes never re-read raw history);
-    3. day-1 ingest: assign the newer half and ``merge_upsert`` by
-       vec_id — replaying day-1 re-merges identical rows and the
-       table is unchanged (idempotent re-ingest);
-    4. compaction: ``compact_parquet`` rewrites the accumulated daily
-       files to target size.
-
-    Returns (cents_dir, assign_dir, cut). Rebuilt from scratch per
-    call so the suite query stays deterministic."""
-    import shutil as _shutil
-    from pathlib import Path as _Path
-
-    from zcode_iceberg_spark.sources.sinks import compact_parquet, merge_upsert
-
-    if _Path(state_dir).exists():
-        _shutil.rmtree(state_dir)
+    Returns (cents_dir, assign_dir, cut)."""
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", sim_ops.norm(F.col("embedding")).alias("nrm")
     )
-    cut = int(
-        e.agg(
-            F.floor(F.lit(INCR_SPLIT_FRAC) * (F.max("vec_id") + 1)).cast("bigint")
-        ).collect()[0][0]
-    )
+    cut = _incr_cut(e, "vec_id")
+    cents = _ivf_cents(e.filter(F.col("vec_id") < cut), ("hist", sf_dir, cut))
     cents_dir = f"{state_dir}/cents"
-    _ivf_cents(e.filter(F.col("vec_id") < cut), ("hist", sf_dir, cut)).write.parquet(cents_dir)
-    cents = spark.read.parquet(cents_dir)
 
-    def assigned(vecs: DataFrame) -> DataFrame:
-        return _ivf_assign(vecs, cents).filter(F.col("crank") == 1).select(
-            "vec_id", "embedding", "nrm", "cell"
-        )
+    def assigned(ids) -> DataFrame:
+        # assign against the persisted centroids: against the in-memory
+        # frame a build took ~0.5 s longer (perfbench corpus, 4 cores);
+        # the known schema skips a schema-inference job
+        persisted = spark.read.schema(cents.schema).parquet(cents_dir)
+        return _ivf_assign(e.filter(ids), persisted).filter(
+            F.col("crank") == 1
+        ).select("vec_id", "embedding", "nrm", "cell")
 
-    day_cut = cut // 2
-    raw_dir = f"{state_dir}/assign_raw"
-    assigned(e.filter(F.col("vec_id") < day_cut)).write.parquet(raw_dir)
-    day1 = assigned(
-        e.filter((F.col("vec_id") >= day_cut) & (F.col("vec_id") < cut))
+    assign_dir = _two_day_ingest(
+        spark, state_dir, cut, "vec_id", "vec_id", assigned,
+        "assign_raw", "assign_compact",
+        model=lambda: cents.write.parquet(cents_dir),
     )
-    merge_upsert(spark, raw_dir, day1, "vec_id")
-    assign_dir = f"{state_dir}/assign_compact"
-    compact_parquet(spark, raw_dir, assign_dir)
     return cents_dir, assign_dir, cut
 
 
@@ -5394,10 +5346,7 @@ def q_ann_ivf_incremental_persisted(
 
 
 SQL_ANN_IVF_INCR = f"""
-WITH cut AS (
-  SELECT CAST(floor({INCR_SPLIT_FRAC} * (max(vec_id) + 1)) AS BIGINT) AS c
-  FROM embeddings
-),
+WITH {_cut_cte("vec_id", "embeddings")},
 {_ivf_cent_ctes(where="vec_id < (SELECT c FROM cut)")},
 scored_cells AS (
   SELECT e.vec_id, e.embedding, c.cell,
@@ -5442,10 +5391,7 @@ def q_ann_ivf_persisted_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_ANN_IVF_PERSISTED_DELETE = f"""
-WITH cut AS (
-  SELECT CAST(floor({INCR_SPLIT_FRAC} * (max(vec_id) + 1)) AS BIGINT) AS c
-  FROM embeddings
-),
+WITH {_cut_cte("vec_id", "embeddings")},
 {_ivf_cent_ctes(where="vec_id < (SELECT c FROM cut)")},
 scored_cells AS (
   SELECT e.vec_id, e.embedding, c.cell,
@@ -5518,10 +5464,7 @@ def q_ann_ivf_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_ANN_IVF_INDEX_BUILD = f"""
-WITH cut AS (
-  SELECT CAST(floor({INCR_SPLIT_FRAC} * (max(vec_id) + 1)) AS BIGINT) AS c
-  FROM embeddings
-),
+WITH {_cut_cte("vec_id", "embeddings")},
 {_ivf_cent_ctes(where="vec_id < (SELECT c FROM cut)")},
 scored_cells AS (
   SELECT e.vec_id, c.cell,
@@ -8117,54 +8060,22 @@ def build_substr_state(
     """Materialize the exact-substring WINDOW-HASH LEDGER the daily
     ingest story reads — the ExactSubstr member of the
     persisted-ingest-state family (exact hash table → LSH band table →
-    IVF/PQ index → passage ledger → substring-window ledger), built
-    end-to-end through the maintenance layer:
-
-    1. day-0 ingest: the older historical half's distinct window
-       hashes, written as the initial ledger;
-    2. day-1 ingest: the newer half's NOVEL hashes ``merge_upsert``'d
-       in (replay-idempotent — re-merging the same rows is a no-op);
-    3. ``compact_parquet`` rewrites the daily files to target size.
+    IVF/PQ index → passage ledger → substring-window ledger): the
+    distinct window hashes ``h`` of history, ingested over two days by
+    :func:`_two_day_ingest` into ``raw`` and compacted into ``ledger``.
 
     Returns (ledger_dir, cut). The ledger holds 16-byte hashes only —
     at 100 TB it is the compacted corpus-windows hash table; a probe
-    never re-reads historical TEXT. Rebuilt per call so the suite
-    query stays deterministic."""
-    import shutil as _shutil
-    from pathlib import Path as _Path
-
-    from zcode_iceberg_spark.sources.sinks import compact_parquet, merge_upsert
-
-    if _Path(state_dir).exists():
-        _shutil.rmtree(state_dir)
+    never re-reads historical TEXT."""
     d = load_table(spark, sf_dir, "documents")
-    cut = int(
-        d.agg(
-            F.floor(F.lit(INCR_SPLIT_FRAC) * (F.max("doc_id") + 1)).cast(
-                "bigint"
-            )
-        ).collect()[0][0]
-    )
-    day_cut = cut // 2
-    raw_dir = f"{state_dir}/raw"
+    cut = _incr_cut(d, "doc_id")
 
-    def hashes(lo: int, hi: int) -> DataFrame:
-        return (
-            _substr_windows(
-                d.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)),
-                SUBSTR_L,
-            )
-            .select("h")
-            .distinct()
-        )
+    def hashes(ids) -> DataFrame:
+        return _substr_windows(d.filter(ids), SUBSTR_L).select("h").distinct()
 
-    hashes(0, day_cut).write.parquet(raw_dir)
-    novel = hashes(day_cut, cut).join(
-        spark.read.parquet(raw_dir), "h", "left_anti"
+    ledger_dir = _two_day_ingest(
+        spark, state_dir, cut, "doc_id", "h", hashes, compact="ledger"
     )
-    merge_upsert(spark, raw_dir, novel, "h")
-    ledger_dir = f"{state_dir}/ledger"
-    compact_parquet(spark, raw_dir, ledger_dir)
     return ledger_dir, cut
 
 
@@ -8262,13 +8173,7 @@ def q_substring_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrences contaminate (test-internal dups are dedup's job)."""
     L = SUBSTR_L
     d = load_table(spark, sf_dir, "documents")
-    cut = int(
-        d.agg(
-            F.floor(F.lit(INCR_SPLIT_FRAC) * (F.max("doc_id") + 1)).cast(
-                "bigint"
-            )
-        ).collect()[0][0]
-    )
+    cut = _incr_cut(d, "doc_id")
     train_h = (
         _substr_windows(d.filter(F.col("doc_id") < cut), L)
         .select("h")
@@ -8291,10 +8196,7 @@ def q_substring_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_SUBSTRING_DECONTAMINATE = f"""
-WITH cut AS (
-  SELECT CAST(floor({INCR_SPLIT_FRAC} * (max(doc_id) + 1)) AS BIGINT) AS c
-  FROM documents
-),
+WITH {_cut_cte()},
 pos AS (
   SELECT doc_id, i, md5(substr(text, i, {SUBSTR_L})) AS h
   FROM documents, LATERAL unnest(
@@ -8338,10 +8240,7 @@ WHERE d.doc_id >= cut.c
 
 
 SQL_SUBSTRING_LEDGER_BUILD = f"""
-WITH cut AS (
-  SELECT CAST(floor({INCR_SPLIT_FRAC} * (max(doc_id) + 1)) AS BIGINT) AS c
-  FROM documents
-),
+WITH {_cut_cte()},
 pos AS (
   SELECT doc_id, i, md5(substr(text, i, {SUBSTR_L})) AS h
   FROM documents, LATERAL unnest(
@@ -8359,10 +8258,7 @@ FROM ledger GROUP BY 1
 
 
 SQL_SUBSTRING_DEDUP_PERSISTED = f"""
-WITH cut AS (
-  SELECT CAST(floor({INCR_SPLIT_FRAC} * (max(doc_id) + 1)) AS BIGINT) AS c
-  FROM documents
-),
+WITH {_cut_cte()},
 pos AS (
   SELECT doc_id, i, md5(substr(text, i, {SUBSTR_L})) AS h
   FROM documents, LATERAL unnest(
@@ -8547,10 +8443,7 @@ def q_dedup_persisted_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_DEDUP_PERSISTED_DELETE = f"""
-WITH cut AS (
-  SELECT CAST(floor({INCR_SPLIT_FRAC} * (max(doc_id) + 1)) AS BIGINT) AS c
-  FROM documents
-),
+WITH {_cut_cte()},
 hashed AS (SELECT doc_id, md5(text) AS content_hash FROM documents),
 new AS (SELECT h.* FROM hashed h, cut WHERE h.doc_id >= cut.c),
 purged AS (
@@ -8592,10 +8485,7 @@ WITH {CHSH_CTE},
 {HASHES_CTE},
 {SIG_CTE},
 {BANDS_CTE},
-cut AS (
-  SELECT CAST(floor({INCR_SPLIT_FRAC} * (max(doc_id) + 1)) AS BIGINT) AS c
-  FROM documents
-),
+{_cut_cte()},
 cand AS (
   SELECT a.doc_id AS nid, b.doc_id AS hid
   FROM bands a
@@ -8639,10 +8529,7 @@ def q_substring_persisted_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_SUBSTRING_PERSISTED_DELETE = f"""
-WITH cut AS (
-  SELECT CAST(floor({INCR_SPLIT_FRAC} * (max(doc_id) + 1)) AS BIGINT) AS c
-  FROM documents
-),
+WITH {_cut_cte()},
 pos AS (
   SELECT doc_id, i, md5(substr(text, i, {SUBSTR_L})) AS h
   FROM documents, LATERAL unnest(

@@ -314,6 +314,33 @@ FROM closed
 SQL_POSITION_LEDGER = _FSM_CLOSED_CTE + _FSM_LEDGER_SELECT
 
 
+def _ledger_rows(led: DataFrame) -> DataFrame:
+    """The closed-trade ledger's output projection — the Spark twin of
+    ``_FSM_LEDGER_SELECT``, shared by every FSM-ledger entry."""
+    return led.select(
+        "user_id",
+        "trade_seq",
+        F.format_string("ZS%04d", F.col("trade_seq")).alias("trade_id"),
+        "side",
+        F.date_format("entry_ts", "yyyy-MM-dd HH:mm:ss").alias("entry_ts"),
+        F.date_format("exit_ts", "yyyy-MM-dd HH:mm:ss").alias("exit_ts"),
+        F.round("entry_price", 6).alias("entry_price"),
+        F.round("exit_price", 6).alias("exit_price"),
+        F.round("qty", 6).alias("qty"),
+        # micro-unit quantization (NOT F.round): a trade that closes at
+        # exactly-zero P&L yields IEEE -0.0 on the DuckDB side under
+        # round(pnl, 6) while Spark's BigDecimal route emits +0.0 —
+        # numerically equal, bit-different, and the driver hash is
+        # bit-sensitive (the r1-r4 position_ledger red row). The integer
+        # round-trip collapses the sign on both engines, exactly like the
+        # ledger's five green sibling oracles.
+        (st.micro("pnl") / F.lit(1e6)).alias("pnl"),
+        (st.micro("roi") / F.lit(1e6)).alias("roi"),
+        "exit_reason",
+        F.round("hold_secs", 6).alias("hold_secs"),
+    )
+
+
 def _live_dec_block() -> str:
     """The live pipeline's decision block: the production ticks→z
     chain with entries additionally GATED by the per-key signal-score
@@ -381,22 +408,7 @@ def q_live_pipeline_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream ≡ batch on every closed trade. Oracle = the composed
     recursive-CTE chain (features + gate + z walk), the composition
     q_wp_calibration already proved writable."""
-    led = st.position_fsm(_live_gated_decisions(spark, sf_dir))
-    return led.select(
-        "user_id",
-        "trade_seq",
-        F.format_string("ZS%04d", F.col("trade_seq")).alias("trade_id"),
-        "side",
-        F.date_format("entry_ts", "yyyy-MM-dd HH:mm:ss").alias("entry_ts"),
-        F.date_format("exit_ts", "yyyy-MM-dd HH:mm:ss").alias("exit_ts"),
-        F.round("entry_price", 6).alias("entry_price"),
-        F.round("exit_price", 6).alias("exit_price"),
-        F.round("qty", 6).alias("qty"),
-        (st.micro("pnl") / F.lit(1e6)).alias("pnl"),
-        (st.micro("roi") / F.lit(1e6)).alias("roi"),
-        "exit_reason",
-        F.round("hold_secs", 6).alias("hold_secs"),
-    )
+    return _ledger_rows(st.position_fsm(_live_gated_decisions(spark, sf_dir)))
 
 
 def _live_pipeline_sql() -> str:
@@ -618,29 +630,7 @@ def q_position_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """H6: position lifecycle FSM → closed-trade ledger. Price-path
     dependent ordered fold; oracled by the recursive-CTE walk above
     (invariants additionally in tests/test_stateful.py)."""
-    led = st.position_fsm(_decisions(spark, sf_dir))
-    return led.select(
-        "user_id",
-        "trade_seq",
-        F.format_string("ZS%04d", F.col("trade_seq")).alias("trade_id"),
-        "side",
-        F.date_format("entry_ts", "yyyy-MM-dd HH:mm:ss").alias("entry_ts"),
-        F.date_format("exit_ts", "yyyy-MM-dd HH:mm:ss").alias("exit_ts"),
-        F.round("entry_price", 6).alias("entry_price"),
-        F.round("exit_price", 6).alias("exit_price"),
-        F.round("qty", 6).alias("qty"),
-        # micro-unit quantization (NOT F.round): a trade that closes at
-        # exactly-zero P&L yields IEEE -0.0 on the DuckDB side under
-        # round(pnl, 6) while Spark's BigDecimal route emits +0.0 —
-        # numerically equal, bit-different, and the driver hash is
-        # bit-sensitive (the r1-r4 position_ledger red row). The integer
-        # round-trip collapses the sign on both engines, exactly like the
-        # ledger's five green sibling oracles.
-        (st.micro("pnl") / F.lit(1e6)).alias("pnl"),
-        (st.micro("roi") / F.lit(1e6)).alias("roi"),
-        "exit_reason",
-        F.round("hold_secs", 6).alias("hold_secs"),
-    )
+    return _ledger_rows(st.position_fsm(_decisions(spark, sf_dir)))
 
 
 def q_ledger_daily_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
